@@ -30,9 +30,19 @@ object Verify {
       // each query's operator-scoped caches die with its terminal action
       graft.data.ScopedCaches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(oracleSql))
+    Files.writeString(Paths.get(s"$outDir/_failed.json"), jsonObject(failed))
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} FAILED: " +
+        failed.map(_._1).mkString(", "))
+    failed.map(_._1).toSeq
+  }
+
+  /** A flat JSON object of string fields. Escapes backslash, quote and
+    * ALL control chars (<0x20): a tab or CR in an oracle's SQL would
+    * otherwise make the whole file unreadable to a strict JSON parser.
+    */
+  def jsonObject(fields: Iterable[(String, String)]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -42,16 +52,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val failedJson = failed
-      .map { case (n, msg) => s"${q(n)}: ${q(msg)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
-    if (failed.nonEmpty)
-      System.err.println(s"[verify] ${failed.size} FAILED: " +
-        failed.map(_._1).mkString(", "))
-    failed.map(_._1).toSeq
+    fields.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 
   /** args: sfDir outDir [comma-separated name filter — dev use only;

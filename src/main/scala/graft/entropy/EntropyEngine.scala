@@ -4,8 +4,6 @@ import graft.core.{AttrSet, Jd, Measure}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable
-
 /** The engine's single data-query primitive: Shannon entropy `H(X)` of
   * the distinct value combinations of a column subset X.
   *
@@ -16,22 +14,26 @@ import scala.collection.mutable
   * equivalent `H = log2(N) - (1/N) * sum_v c_v * log2(c_v)`, which needs
   * one aggregate over the group counts.
   *
-  * Spark shape: each uncached entropy is `df.groupBy(cols).count()` +
-  * a scalar aggregate — exact (the reference's in-memory path groups by a
+  * Spark shape: every memo miss is answered by ONE query shape, a
+  * `GROUP BY GROUPING SETS` count over a batch of subsets followed by a
+  * per-set `sum(c*log2 c)` keyed by `grouping_id()` — one scan + one
+  * shuffle per batch, exact (the reference's in-memory path groups by a
   * 32-bit hash and can merge distinct groups on collision; SURVEY §4
-  * documents the divergence). Batches of subsets share ONE scan + shuffle
-  * via GROUP BY GROUPING SETS (the Spark analogue of the reference's
-  * multi-subset shared file scan, `entropy/ExternalFileDataSet.java:91-166`).
+  * documents the divergence). It is the Spark analogue of the
+  * reference's multi-subset shared file scan
+  * (`entropy/ExternalFileDataSet.java:91-166`). [[entropy]] is a batch of
+  * one; [[prefetch]] / [[entropies]] chunk their misses into batches of
+  * 16, because the Expand before the shuffle multiplies rows by the
+  * batch size. The input `df` should be cached by the caller when many
+  * entropies will be asked.
   *
   * Driver-side memoization (a reference "optimization" Catalyst cannot
   * see across queries) fronts everything; mining issues thousands of tiny
-  * entropy queries and the memo + batching keep that tractable.
-  *
-  * Scale notes: groupBy on a column subset shuffles only the projected
-  * columns (dictionary-encoded ints), with map-side partial aggregation;
-  * the grouping-sets batch multiplies rows by the batch size before the
-  * shuffle, so batches are chunked (`maxBatch`). The input `df` should be
-  * cached by the caller when many entropies will be asked.
+  * entropy queries and the memo + batching keep that tractable. The memo
+  * needs no eviction: it holds one `Double` per non-empty subset asked,
+  * so at most 2^n - 1 entries for an n-attribute relation, and an engine
+  * serves one relation (the miners' lattice walks already assume 2^n
+  * driver-side work).
   */
 final class EntropyEngine(val df: DataFrame, precomputedN: Option[Long] = None) {
 
@@ -56,9 +58,10 @@ final class EntropyEngine(val df: DataFrame, precomputedN: Option[Long] = None) 
   def numQueriesIssued: Long = queriesIssued.get()
   def numCacheHits: Long = cacheHits.get()
 
-  private def log2(x: Double): Double = math.log(x) / math.log(2.0)
+  /** Subsets per GROUPING SETS job. */
+  private val BatchSize = 16
 
-  private def colsOf(x: AttrSet): Seq[Column] = x.toSeq.map(i => col(attrNames(i)))
+  private def log2(x: Double): Double = math.log(x) / math.log(2.0)
 
   def cachedEntropies: Int = memo.size
 
@@ -68,58 +71,9 @@ final class EntropyEngine(val df: DataFrame, precomputedN: Option[Long] = None) 
     memo.get(x) match {
       case Some(h) => cacheHits.incrementAndGet(); h
       case None =>
-        if (x == fullSet) { memo(x) = totalEntropy; return totalEntropy }
-        queriesIssued.incrementAndGet()
-        val h = entropyJob(x)
-        memo(x) = h
-        h
+        if (x == fullSet) memo(x) = totalEntropy else sumClogC(Seq(x))
+        memo(x)
     }
-  }
-
-  private def entropyJob(x: AttrSet): Double = {
-    // sum over groups of c*log2(c); H = log2(N) - that/N
-    val s = df.groupBy(colsOf(x): _*).agg(count(lit(1)).as("cnt"))
-      .agg(sum(col("cnt").cast("double") * log(2.0, col("cnt")))).head()
-    val sumClogC = if (s.isNullAt(0)) 0.0 else s.getDouble(0)
-    totalEntropy - sumClogC / numRows
-  }
-
-  /** Sparse-count variant (reference A4/A5/P6,
-    * `entropy/CompressedDB.java:270-346`): drop singleton groups with
-    * `HAVING cnt > 1` before the final aggregate and reconstruct their
-    * contribution analytically — `1*log2(1) = 0`, so the correction term
-    * vanishes in this formulation and the filter only shrinks the
-    * aggregate's input (the reference stores sparse CNT tables for the
-    * same reason). Result is identical to [[entropy]]; kept as a
-    * separate path for inventory parity and as the shape to prefer when
-    * group counts are heavily skewed toward singletons.
-    */
-  def entropySparse(x: AttrSet): Double = {
-    if (x.isEmpty) return 0.0
-    queriesIssued.incrementAndGet()
-    val s = df.groupBy(colsOf(x): _*).agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") > 1)
-      .agg(sum(col("cnt").cast("double") * log(2.0, col("cnt")))).head()
-    val sumClogC = if (s.isNullAt(0)) 0.0 else s.getDouble(0)
-    totalEntropy - sumClogC / numRows
-  }
-
-  /** One-pass multi-subset entropies via the custom aggregate
-    * ([[MultiSubsetEntropy]]): ONE scan with per-subset count maps and no
-    * Expand row-multiplication, the reference's shared-scan profile. Use
-    * for many low-cardinality subsets; [[entropies]] (GROUPING SETS)
-    * remains the default and the exact path for key-like subsets.
-    */
-  def entropiesOnePass(sets: Seq[AttrSet]): Map[AttrSet, Double] = {
-    val pending = sets.filter(s => s.nonEmpty && s != fullSet && !memo.contains(s)).distinct
-    if (pending.nonEmpty) {
-      queriesIssued.incrementAndGet()
-      val sums = MultiSubsetEntropy.sumClogC(df, pending.map(colsOf))
-      pending.zip(sums).foreach { case (x, s) =>
-        memo(x) = totalEntropy - s / numRows
-      }
-    }
-    sets.map(s => s -> entropy(s)).toMap
   }
 
   /** C4 parity: pre-warm the memo with every (n-1)- and (n-2)-subset
@@ -137,32 +91,32 @@ final class EntropyEngine(val df: DataFrame, precomputedN: Option[Long] = None) 
   /** C5 parity: the full entropy lattice (all non-empty subsets),
     * batched. Exponential in the attribute count — callers guard n.
     */
-  def allEntropies(maxBatch: Int = 16): Map[AttrSet, Double] =
-    entropies(AttrSet.allNonEmptySubsets(numAttrs), maxBatch)
+  def allEntropies(): Map[AttrSet, Double] =
+    entropies(AttrSet.allNonEmptySubsets(numAttrs))
 
   /** Ensure all of `sets` are memoized, sharing scans: uncached subsets
-    * are grouped into GROUPING SETS batches of `maxBatch`, one Spark job
-    * per batch (one scan + one shuffle each).
+    * are grouped into batches, one Spark job per batch.
     */
-  def prefetch(sets: Iterable[AttrSet], maxBatch: Int = 16): Unit = {
-    val pending = sets.iterator
+  def prefetch(sets: Iterable[AttrSet]): Unit =
+    sets.iterator
       .filter(s => s.nonEmpty && s != fullSet && !memo.contains(s))
       .toSeq.distinct
-    pending.grouped(maxBatch).foreach(batchJob)
-  }
+      .grouped(BatchSize).foreach(sumClogC)
 
   /** Entropies of many subsets (memo + shared-scan batches). */
-  def entropies(sets: Seq[AttrSet], maxBatch: Int = 16): Map[AttrSet, Double] = {
-    prefetch(sets, maxBatch)
+  def entropies(sets: Seq[AttrSet]): Map[AttrSet, Double] = {
+    prefetch(sets)
     sets.map(s => s -> entropy(s)).toMap
   }
 
-  private def batchJob(batch: Seq[AttrSet]): Unit = {
-    if (batch.isEmpty) return
-    if (batch.length == 1) { entropy(batch.head); return }
+  /** The engine's only Spark job: `sum c*log2 c` over the groups of every
+    * subset in `batch` (distinct, non-empty, not the full set), in one
+    * GROUPING SETS aggregate, memoized as `H(X)`.
+    */
+  private def sumClogC(batch: Seq[AttrSet]): Unit = {
     queriesIssued.incrementAndGet()
-    val unionCols: Seq[Int] = batch.foldLeft(AttrSet.empty)(_ union _).toSeq
-    val pos = unionCols.zipWithIndex.toMap // attr -> bit position (left-to-right)
+    val union = batch.reduce(_ union _)
+    val unionCols = union.toSeq
     val nCols = unionCols.length
     // grouping_id() bit for column j (in groupingSets column order) is
     // 2^(nCols-1-j), set when the column is AGGREGATED (not in the set)
@@ -170,22 +124,16 @@ final class EntropyEngine(val df: DataFrame, precomputedN: Option[Long] = None) 
       unionCols.zipWithIndex.foldLeft(0L) { case (g, (a, j)) =>
         if (x.contains(a)) g else g | (1L << (nCols - 1 - j))
       }
-    val gidToSet = batch.map(x => gidOf(x) -> x).toMap
-    require(gidToSet.size == batch.size, "duplicate subsets in batch")
-    val gcols = unionCols.map(i => col(attrNames(i)))
-    val rows = df
-      .groupingSets(batch.map(x => x.toSeq.map(i => col(attrNames(i)))), gcols: _*)
+    def colsOf(x: AttrSet): Seq[Column] = x.toSeq.map(i => col(attrNames(i)))
+    val sums = df
+      .groupingSets(batch.map(colsOf), colsOf(union): _*)
       .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"))
       .groupBy(col("gid"))
       .agg(sum(col("cnt").cast("double") * log(2.0, col("cnt"))).as("s"))
       .collect()
-    rows.foreach { r =>
-      val gid = r.getLong(0)
-      gidToSet.get(gid).foreach { x =>
-        val sumClogC = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-        memo(x) = totalEntropy - sumClogC / numRows
-      }
-    }
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // an empty relation has no groups: sum over nothing is 0
+    batch.foreach(x => memo(x) = totalEntropy - sums.getOrElse(gidOf(x), 0.0) / numRows)
   }
 
   // ---- Dependency measures (entropy/AbstractDataset.java:94-277) ----

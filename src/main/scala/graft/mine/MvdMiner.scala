@@ -69,8 +69,7 @@ final class MvdMiner(eng: EntropyEngine, threshold: Double,
   }
 
   /** Inference-accelerated miner: same output, fewer entropy queries. */
-  def mine(useLatticeInference: Boolean = true,
-           useDependencyBasis: Boolean = true): Seq[Mvd] = {
+  def mine(): Seq[Mvd] = {
     val out = mutable.ArrayBuffer.empty[Mvd]
     val lattice = new LatticeOrderingInference
     val basis = new DependencyBasis(n)
@@ -82,9 +81,9 @@ final class MvdMiner(eng: EntropyEngine, threshold: Double,
       val resolved = mutable.ArrayBuffer.empty[(AttrSet, AttrSet, Double)]
       for (x <- level; y <- candidatesFor(x)) {
         val inferred: Option[Double] =
-          (if (useLatticeInference) lattice.upperBound(x, y) else None)
+          lattice.upperBound(x, y)
             .filter(b => Measure(0, b).belowThreshold(threshold))
-            .orElse((if (useDependencyBasis) basis.upperBound(x, y) else None)
+            .orElse(basis.upperBound(x, y)
               .filter(b => Measure(0, b).belowThreshold(threshold)))
         inferred match {
           case Some(b) => resolved += ((x, y, b))

@@ -108,10 +108,11 @@ object Graph {
       // one explicit repartition on n, then BOTH aggregates ride it
       // (HashPartitioning(n) satisfies the (n, lbl) clustering): two
       // exchanges per round total, and the per-node top-1 is a
-      // combinable max(struct(c, -lbl)) aggregate — same row as the
+      // combinable min(struct(-c, lbl)) aggregate — same row as the
       // former row_number window (c desc, lbl asc over distinct
       // (n, lbl) rows has a unique head), without sorting the vote
-      // table every round
+      // table every round. The count is negated, never the label, so
+      // any orderable label type (strings, Long.MinValue) is safe
       val votes = und.join(lab.withColumnRenamed("node", "m")
             .hint("shuffle_hash"), "m")
         .select(col("n"), col("lbl"))
@@ -119,8 +120,8 @@ object Graph {
       lab = graft.data.ScopedCaches.materialize(
         votes.groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
           .groupBy(col("n"))
-          .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("n").as("node"), (-col("m.nl")).as("lbl")))
+          .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
+          .select(col("n").as("node"), col("m.lbl").as("lbl")))
     }
     lab
   }

@@ -336,12 +336,13 @@ object CoreQueries {
       |  event_type, count(*) AS cnt, round(sum(value), 4) AS sum_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** A4/A5: sparse-count entropy (HAVING cnt>1 + analytic singleton
-    * term) — must equal the dense path.
+  /** A4/A5: the reference's sparse-count entropy (HAVING cnt>1; the
+    * singletons' `1*log2(1)` term is 0) — the engine's one path must
+    * equal it.
     */
   private def entSparse(s: SparkSession, dir: String): DataFrame = {
     val eng = new EntropyEngine(liProj(s, dir))
-    scalarDouble(s, "entropy", eng.entropySparse(AttrSet(0, 1)))
+    scalarDouble(s, "entropy", eng.entropy(AttrSet(0, 1)))
   }
 
   private val entSparseSql = {

@@ -1,25 +1,13 @@
 package graft.tools
+
+/** Writes every registered query's oracle SQL to one JSON object,
+  * `{"<query name>": "<DuckDB SQL>", ...}`, for iterating on the DuckDB
+  * replay without a full Verify run. One oracle:
+  * `jq -r '.<name>' <out.json>`.
+  * Usage: runMain graft.tools.DumpOracles <out.json>
+  */
 object DumpOracles {
-  def main(args: Array[String]): Unit = {
-    val m = graft.SparkEntry.oracleSql
-    val sb = new StringBuilder("{")
-    var first = true
-    m.foreach { case (k, v) =>
-      if (!first) sb.append(",")
-      first = false
-      def esc(s: String) = s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      sb.append("\"").append(esc(k)).append("\":\"").append(esc(v)).append("\"")
-    }
-    sb.append("}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(args(0)),
-      sb.toString.getBytes("UTF-8"))
-  }
+  def main(args: Array[String]): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(args(0)),
+      graft.Verify.jsonObject(graft.SparkEntry.oracleSql))
 }

@@ -53,6 +53,10 @@ object StageProfile {
         Thread.sleep(200)
         spins += 1
       }
+      if (rows.synchronized(rows.size) != prev)
+        System.err.println(s"[stageprofile] WARNING: $name rep $r: stage " +
+          "rows still arriving after the 2 s settle bound; the table below " +
+          "may be missing stages")
       val snap = rows.synchronized(rows.toVector)
       println(f"=== $name rep $r: $sec%.2f s ($n rows), ${snap.size} stages ===")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"task_ms"}%9s ${"shRead"}%10s ${"shWrite"}%10s ${"input"}%10s ${"tasks"}%5s  name")

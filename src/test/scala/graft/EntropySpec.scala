@@ -30,13 +30,16 @@ class EntropySpec extends AnyFunSuite {
     assert(fresh.numQueriesIssued == 1)
   }
 
-  test("one-pass custom aggregate equals the grouping-sets batch") {
-    val fresh = new EntropyEngine(relation(rows))
-    val subsets = AttrSet.allNonEmptySubsets(3).filter(_.size < 3)
-    val onePass = fresh.entropiesOnePass(subsets)
-    assert(fresh.numQueriesIssued == 1) // one scan for all subsets
-    for (x <- subsets) {
-      assert(math.abs(onePass(x) - naiveEntropy(rows, x.toSeq)) < 1e-9, s"$x")
+  test("a memo miss via entropy(x) and via prefetch(Seq(x)) agree, one job each") {
+    for (x <- Seq(AttrSet(0), AttrSet(1, 2))) {
+      val single = new EntropyEngine(relation(rows))
+      val batched = new EntropyEngine(relation(rows))
+      val h = single.entropy(x)
+      batched.prefetch(Seq(x))
+      assert(single.numQueriesIssued == 1 && batched.numQueriesIssued == 1, s"$x")
+      assert(batched.entropy(x) == h, s"$x")
+      assert(batched.numQueriesIssued == 1 && batched.numCacheHits == 1, s"$x")
+      assert(math.abs(h - naiveEntropy(rows, x.toSeq)) < 1e-9, s"$x")
     }
   }
 

@@ -1,6 +1,9 @@
 package graft
 
 import graft.ops.{Analytics, Graph}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -22,6 +25,53 @@ class GraphSpec extends AnyFunSuite {
     }
     pr.map { case (k, v) => k -> BigDecimal(v)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble }
+  }
+
+  /** Reference label propagation: per node, the row_number top-1 vote
+    * ordered by (count desc, label asc) — the rule labelPropagationAssign
+    * implements as a combinable aggregate.
+    */
+  private def refLabels(edges: DataFrame, rounds: Int): Set[(Any, Any)] = {
+    val und = edges.select(col("a").as("n"), col("b").as("m"))
+      .union(edges.select(col("b").as("n"), col("a").as("m"))).distinct()
+    var lab = und.select(col("n").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+    val top = Window.partitionBy(col("n")).orderBy(col("c").desc, col("lbl").asc)
+    for (_ <- 1 to rounds) {
+      lab = und.join(lab.withColumnRenamed("node", "m"), "m")
+        .groupBy(col("n"), col("lbl")).agg(count(lit(1)).as("c"))
+        .withColumn("rk", row_number().over(top))
+        .filter(col("rk") === 1).select(col("n").as("node"), col("lbl"))
+    }
+    lab.collect().map(r => (r.get(0), r.get(1))).toSet
+  }
+
+  private def assignedLabels(edges: DataFrame, rounds: Int): Set[(Any, Any)] =
+    Graph.labelPropagationAssign(edges, "a", "b", rounds)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+
+  test("labelPropagationAssign: string node IDs match the row_number reference") {
+    import spark.implicits._
+    // string order differs from numeric order ("n10" < "n2" < "n9"):
+    // after round 1, n9 (neighbours n10, n2, y) holds "n10"
+    val edges = Seq(("n10", "n9"), ("n9", "n2"), ("n2", "n10"),
+      ("n2", "x"), ("x", "y"), ("y", "n9")).toDF("a", "b")
+    for (rounds <- 1 to 3) {
+      val got = assignedLabels(edges, rounds)
+      assert(got == refLabels(edges, rounds), s"rounds=$rounds")
+      assert(got.size == 5 && got.forall(_._2 != null), s"rounds=$rounds")
+    }
+    assert(assignedLabels(edges, 1).contains(("n9", "n10")))
+  }
+
+  test("labelPropagationAssign: Long.MinValue ID matches the row_number reference") {
+    import spark.implicits._
+    val edges = Seq((Long.MinValue, 0L), (0L, 1L), (Long.MinValue, 1L),
+      (1L, 2L), (2L, Long.MaxValue)).toDF("a", "b")
+    for (rounds <- 1 to 3)
+      assert(assignedLabels(edges, rounds) == refLabels(edges, rounds), s"rounds=$rounds")
+    // the triangle holding Long.MinValue adopts it after one round
+    assert(assignedLabels(edges, 1).collect { case (n, l) if n == 0L => l } == Set(Long.MinValue))
   }
 
   test("degreeAssortativity: a star is exactly -1") {

@@ -1069,6 +1069,27 @@ class OpsSpec extends AnyFunSuite {
     assert(got(3L) == ((3L, 3L, 1.0)), "disjoint content fully novel")
   }
 
+  test("ngramNovelty n_shingles equals size(charShingles) per doc") {
+    // ngramNovelty inlines its own shingle explode; this pins it to the
+    // charShingles kernel on the edge cases where two copies would drift
+    val texts = Seq(1L -> "", 2L -> "abc", 3L -> "abcdefgh",
+      4L -> "abababababab", 5L -> "  AbCdEfGhIj  ", 6L -> null)
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      texts.map { case (i, t) => Row(i, t) }: _*),
+      StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("text", StringType))))
+    val novelty = TextAnalysis.ngramNovelty(df, "doc_id", "text", k = 8)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val kernel = df.select(col("doc_id"),
+        size(TextAnalysis.charShingles(col("text"), 8)).cast("long"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (i <- 1L to 5L) assert(novelty.get(i) == kernel.get(i), s"doc $i")
+    assert(kernel(4L) == 2L && kernel(5L) == 3L)
+    // null text: the kernel yields [null] (size 1), but ngramNovelty's
+    // shingle self-join on s drops the null shingle, so the doc has no row
+    assert(kernel(6L) == 1L && !novelty.contains(6L))
+  }
+
   test("sourceCrossEntropy: hand-computed 2x2 matrix with add-one smoothing") {
     val df = spark.createDataFrame(java.util.Arrays.asList(
       Row(1L, "A", "x x y"), Row(2L, "B", "x y y")),
