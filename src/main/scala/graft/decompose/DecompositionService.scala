@@ -5,7 +5,6 @@ import graft.schema.JoinTree
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.Executors
-import scala.collection.mutable
 import scala.concurrent.{ExecutionContext, Future}
 
 /** Async decomposition-evaluation facade: the Spark analogue of the
@@ -14,13 +13,12 @@ import scala.concurrent.{ExecutionContext, Future}
   * copy + LRU of results). Here the "private DB copy" is Spark's shared
   * cached plan; workers are a small driver-side pool submitting Spark
   * actions; cancellation maps to `cancelJobGroup`; results keep an LRU
-  * keyed by the cluster set.
+  * keyed by the cluster set, holding at most 100 evaluations.
   */
 final class DecompositionService(
     spark: SparkSession,
     decomposer: Decomposer,
-    workers: Int = math.min(4, Runtime.getRuntime.availableProcessors() - 1),
-    cacheMax: Int = 100) {
+    workers: Int = math.min(4, Runtime.getRuntime.availableProcessors() - 1)) {
 
   // daemon workers: a missed shutdown() (e.g. an exception before it)
   // must not pin the JVM open
@@ -32,35 +30,33 @@ final class DecompositionService(
     })
   private implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
-  // access-ordered LRU, like the reference's LinkedHashMap(accessOrder)
-  private val lru = new java.util.LinkedHashMap[Set[AttrSet], DecompositionInfo](
+  private val CacheMax = 100
+  // access-ordered LRU, like the reference's LinkedHashMap(accessOrder);
+  // it holds the Future, so a miss during an evaluation joins it
+  private val lru = new java.util.LinkedHashMap[Set[AttrSet], Future[DecompositionInfo]](
     16, 0.75f, true) {
     override def removeEldestEntry(
-        e: java.util.Map.Entry[Set[AttrSet], DecompositionInfo]): Boolean =
-      size() > cacheMax
+        e: java.util.Map.Entry[Set[AttrSet], Future[DecompositionInfo]]): Boolean =
+      size() > CacheMax
   }
-
-  private def cacheGet(k: Set[AttrSet]): Option[DecompositionInfo] =
-    lru.synchronized(Option(lru.get(k)))
-  private def cachePut(k: Set[AttrSet], v: DecompositionInfo): Unit =
-    lru.synchronized { lru.put(k, v); () }
 
   private def jobGroup(tree: JoinTree.Tree): String =
     "decomp-" + tree.clusters.map(_.toString).mkString("|").hashCode.toHexString
 
-  /** Submit an evaluation; memoized on the cluster set. */
+  /** Submit an evaluation; memoized on the cluster set, one at a time
+    * per set. A failed or cancelled one is replaced, so a retry re-runs. */
   def submitJob(tree: JoinTree.Tree): Future[DecompositionInfo] = {
     val key = tree.clusters.toSet
-    cacheGet(key) match {
-      case Some(info) => Future.successful(info)
-      case None => Future {
-        spark.sparkContext.setJobGroup(jobGroup(tree),
-          s"decomposition ${tree.clusters.mkString(", ")}", interruptOnCancel = true)
-        try {
-          val info = decomposer.evaluate(tree)
-          cachePut(key, info)
-          info
-        } finally spark.sparkContext.clearJobGroup()
+    lru.synchronized {
+      Option(lru.get(key)).filterNot(_.value.exists(_.isFailure)).getOrElse {
+        val f = Future {
+          spark.sparkContext.setJobGroup(jobGroup(tree),
+            s"decomposition ${tree.clusters.mkString(", ")}", interruptOnCancel = true)
+          try decomposer.evaluate(tree)
+          finally spark.sparkContext.clearJobGroup()
+        }
+        lru.put(key, f)
+        f
       }
     }
   }

@@ -63,6 +63,16 @@ object Dedup {
           .otherwise(lit("keep")).as("verdict"))
   }
 
+  /** The one shingle definition of both forms: `lower(trim(text))`
+    * (trim drops spaces only), then the k-code-point `substr` at every
+    * start 1..max(len − (k−1), 1); null text is one null shingle.
+    */
+  private def shingleText(text: Column): Column = lower(trim(text))
+  private def shingleStarts(t: Column, k: Int): Column =
+    sequence(lit(1), greatest(length(t) - (k - 1), lit(1)))
+  private def shingleAt(t: Column, i: Column, k: Int): Column =
+    t.substr(i, lit(k))
+
   /** Exploded (id, shingle) postings — positions exploded first so the
     * per-position `substr` stays inside whole-stage codegen (building a
     * per-row shingle array with `transform` runs interpreted and
@@ -70,11 +80,18 @@ object Dedup {
     */
   def shinglePostings(df: DataFrame, idCol: String, textCol: String,
                       k: Int): DataFrame =
-    df.select(col(idCol).as("id"), lower(trim(col(textCol))).as("__t"))
+    df.select(col(idCol).as("id"), shingleText(col(textCol)).as("__t"))
       .select(col("id"), col("__t"),
-        explode(sequence(lit(1), greatest(length(col("__t")) - (k - 1), lit(1))))
-          .as("__i"))
-      .select(col("id"), col("__t").substr(col("__i"), lit(k)).as("s"))
+        explode(shingleStarts(col("__t"), k)).as("__i"))
+      .select(col("id"), shingleAt(col("__t"), col("__i"), k).as("s"))
+
+  /** The distinct shingles of one text as an array: the per-row form
+    * of [[shinglePostings]] (interpreted, so batch scans explode).
+    */
+  def charShingles(text: Column, k: Int): Column = {
+    val t = shingleText(text)
+    array_distinct(transform(shingleStarts(t, k), i => shingleAt(t, i, k)))
+  }
 
   /** Distinct posting list (id, shingle) with stop-shingles (document
     * frequency > dfCap) removed.
@@ -186,6 +203,27 @@ object Dedup {
     }
   }
 
+  /** The family's shingle hash: the first 8 md5 hex chars masked to 31
+    * bits — portable and always a valid residue mod P. */
+  private def shingleHash(s: Column): Column =
+    conv(substring(md5(s), 1, 8), 16, 10).cast("long")
+      .bitwiseAND(lit(0x7FFFFFFFL))
+
+  /** The family's permutations `x ↦ (a·x + b) mod P`, one per hash. */
+  private def minhashPerms(numHashes: Int): IndexedSeq[Column => Column] =
+    minhashConstants(numHashes).map { case (a, b) =>
+      (x: Column) => (lit(a) * x + lit(b)) % lit(MinhashP)
+    }
+
+  /** A signature's `array<struct<band, bh>>`, `bh` the band's raw values. */
+  private def bandSlices(sig: IndexedSeq[Column], bands: Int): Column = {
+    require(sig.size % bands == 0, "bands must divide numHashes")
+    val rows = sig.size / bands
+    array((0 until bands).map { b =>
+      struct(lit(b).as("band"), array(sig.slice(b * rows, (b + 1) * rows): _*).as("bh"))
+    }: _*)
+  }
+
   /** MinHash signatures (id, sig_0..sig_{m-1}): per hash function j, the
     * minimum of a pairwise-independent permutation of the md5-derived
     * 31-bit shingle hash over the document's shingles.
@@ -198,31 +236,27 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, k: Int): DataFrame = {
-    // hash each shingle string once (first 8 md5 hex chars, masked to
-    // 31 bits — portable and always a valid residue mod P)
+    // hash each shingle string once
     val post = shinglePostings(df, idCol, textCol, k)
-      .select(col("id"),
-        conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long")
-          .bitwiseAND(lit(0x7FFFFFFFL)).as("x"))
-    val cs = minhashConstants(numHashes)
-    def perm(j: Int): Column = {
-      val (a, b) = cs(j)
-      (lit(a) * col("x") + lit(b)) % lit(MinhashP)
-    }
+      .select(col("id"), shingleHash(col("s")).as("x"))
+    val perm = minhashPerms(numHashes)
     post.groupBy(col("id")).agg(
-      min(perm(0)).as("sig_0"),
-      (1 until numHashes).map(j => min(perm(j)).as(s"sig_$j")): _*)
+      min(perm(0)(col("x"))).as("sig_0"),
+      (1 until numHashes).map(j => min(perm(j)(col("x"))).as(s"sig_$j")): _*)
   }
 
-  /** MinHash+LSH near-duplicate pairs: band the signature, bucket-join
-    * on (band index, band values), then verify candidates with the
-    * exact shingle Jaccard. `bands` must divide `numHashes`. The bucket
-    * key is the band's raw signature slice, not a hash of it: equality
-    * on the slice is the exact LSH semantics (a hash would add
-    * collision-induced candidates — harmless after verification but
-    * irreproducible outside this engine), and it keeps the whole
-    * pipeline expressible as the DuckDB oracle SQL.
-    */
+  /** Per row, the family's hashes of a text's distinct shingles: the
+    * input of [[minhashBands]], its own column so md5 runs once. */
+  def shingleHashes(text: Column, k: Int): Column =
+    transform(charShingles(text, k), shingleHash(_))
+
+  /** Per row, a document's band slices from its [[shingleHashes]] —
+    * equal to its [[minhashBandStore]] rows — for a stream that cannot
+    * aggregate before bucketing. */
+  def minhashBands(hashes: Column, numHashes: Int, bands: Int): Column =
+    bandSlices(minhashPerms(numHashes).map(p => array_min(transform(hashes, p))),
+      bands)
+
   /** The persistable MinHash band index of a corpus: one row per
     * (document, band) with the band's raw signature slice —
     * `(band, bh, id)`. This is the STATE a continuously-ingesting
@@ -240,17 +274,28 @@ object Dedup {
   def minhashBandStore(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 32, bands: Int = 8,
                        k: Int = 8): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     val sig = minhashSignatures(df, idCol, textCol, numHashes, k)
-    val bandStructs = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        array((b * rows until (b + 1) * rows).map(j => col(s"sig_$j")): _*).as("bh"))
-    }: _*)
-    sig.select(col("id"), explode(bandStructs).as("e"))
+    sig.select(col("id"),
+        explode(bandSlices((0 until numHashes).map(j => col(s"sig_$j")), bands)).as("e"))
       .select(col("e.band").as("band"), col("e.bh").as("bh"), col("id"))
   }
 
+  /** A band store's bucket self-join: (band, bh, id1 < id2), one row
+    * per pair per shared bucket. */
+  def bucketPairs(store: DataFrame): DataFrame =
+    store.toDF("band", "bh", "id1")
+      .join(store.toDF("band", "bh", "id2"), Seq("band", "bh"))
+      .filter(col("id1") < col("id2"))
+
+  /** MinHash+LSH near-duplicate pairs: band the signature, bucket-join
+    * on (band index, band values), then verify candidates with the
+    * exact shingle Jaccard. `bands` must divide `numHashes`. The bucket
+    * key is the band's raw signature slice, not a hash of it: equality
+    * on the slice is the exact LSH semantics (a hash would add
+    * collision-induced candidates — harmless after verification but
+    * irreproducible outside this engine), and it keeps the whole
+    * pipeline expressible as the DuckDB oracle SQL.
+    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 32, bands: Int = 8, k: Int = 8,
                       tau: Double = 0.5): DataFrame = {
@@ -264,10 +309,7 @@ object Dedup {
     // cand is referenced three times below (pair join + both candDocs
     // arms); materialize the tiny result for the same reason
     val cand = graft.data.ScopedCaches.materialize(
-      buckets.toDF("band", "bh", "id1")
-        .join(buckets.toDF("band", "bh", "id2"), Seq("band", "bh"))
-        .filter(col("id1") < col("id2"))
-        .select("id1", "id2").distinct())
+      bucketPairs(buckets).select("id1", "id2").distinct())
     // exact-Jaccard verification via distinct shingle postings of the
     // candidate docs only: |A n B| = count of shingles reached from the
     // pair through both docs' postings; stays in whole-stage codegen

@@ -107,14 +107,6 @@ object TextAnalysis {
         coalesce(col("char_entropy"), lit(0d)).as("char_entropy"))
   }
 
-  /** Distinct character k-grams (shingles) of the raw text. */
-  def charShingles(text: Column, k: Int): Column = {
-    val t = lower(trim(text))
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(t) - (k - 1), lit(1))),
-      i => t.substr(i, lit(k))))
-  }
-
   /** Tiny per-language stopword profiles for the language-ID heuristic.
     * Scores are *distinct stopwords present*; ties break by the fixed
     * profile order.
@@ -1624,33 +1616,24 @@ object TextAnalysis {
     * Scale shape: one (shingle → min doc_id) combinable aggregate over
     * the exploded distinct shingles, one join back on shingle, one
     * per-doc combinable count. The shingle table is the big
-    * intermediate — identical shape (and cost) to the MinHash shingle
-    * stage; all counts exact.
+    * intermediate — the MinHash kernel's own distinct
+    * [[Dedup.shinglePostings]]; all counts exact.
     */
   def ngramNovelty(df: org.apache.spark.sql.DataFrame, idCol: String,
                    textCol: String, k: Int = 8):
       org.apache.spark.sql.DataFrame = {
-    // positions exploded then substr + distinct, NOT
-    // explode(charShingles(...)): transform/array_distinct are
-    // CodegenFallback higher-order functions, so the per-row array
-    // build runs interpreted and dominates the scan; this shape keeps
-    // the shingle pass in whole-stage codegen and produces the same
-    // distinct (doc, shingle) set
-    val t = lower(trim(col(textCol)))
-    val sh = df.select(col(idCol).as("doc_id"), t.as("__t"))
-      .select(col("doc_id"), col("__t"),
-        explode(sequence(lit(1),
-          greatest(length(col("__t")) - (k - 1), lit(1)))).as("__i"))
-      .select(col("doc_id"), col("__t").substr(col("__i"), lit(k)).as("s"))
-      .distinct()
-    val shC = graft.data.ScopedCaches.track(sh)
-    val firsts = shC.groupBy(col("s")).agg(min(col("doc_id")).as("fdoc"))
+    // the exploded kernel, not explode(Dedup.charShingles(...)): the
+    // array form's transform/array_distinct run interpreted, this one
+    // stays in whole-stage codegen
+    val shC = graft.data.ScopedCaches.track(
+      Dedup.shinglePostings(df, idCol, textCol, k).distinct())
+    val firsts = shC.groupBy(col("s")).agg(min(col("id")).as("fdoc"))
     shC.join(firsts, "s")
-      .groupBy(col("doc_id"))
+      .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("fdoc") === col("doc_id"), 1L).otherwise(0L))
+        sum(when(col("fdoc") === col("id"), 1L).otherwise(0L))
           .as("n_novel"))
-      .select(col("doc_id"), col("n_shingles"), col("n_novel"),
+      .select(col("id").as("doc_id"), col("n_shingles"), col("n_novel"),
         round(col("n_novel").cast("double") / col("n_shingles"), 6)
           .as("novelty"))
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -190,120 +191,117 @@ object StreamOps extends Serializable {
   // ---- incremental near-dup detection ----
 
   final case class DocEvent(doc_id: Long, ts: java.sql.Timestamp, text: String)
-  final case class BucketDoc(bucket: String, doc_id: Long, ts: java.sql.Timestamp)
-  final case class NearDupCand(id1: Long, id2: Long, bucket: String)
-  final case class BucketState(ids: List[Long])
+  /** A document in MinHash bucket (band, bh); `fp` null: no exact dedup. */
+  final case class BucketDoc(band: Int, bh: Seq[Long], doc_id: Long,
+                             ts: java.sql.Timestamp, fp: String)
+  final case class NearDupCand(id1: Long, id2: Long, band: Int, bh: Seq[Long])
+  final case class BucketState(ids: List[Long], fps: List[String])
 
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** MinHash band-bucket keys of one document, computed in plain Scala so
-    * the streaming path and its batch parity twin share the identical
-    * bit stream (MurmurHash3 string hash + splitmix re-mixing — both
-    * public, deterministic across JVMs). `bands` must divide
-    * `numHashes`.
+  /** The bucket rows of a (doc_id, ts, text, fp) frame, one per
+    * (document, band): the batch kernel's MinHash evaluated per row
+    * ([[graft.ops.Dedup.minhashBands]]), so a document's rows equal its
+    * [[graft.ops.Dedup.minhashBandStore]] rows. Null text forms no bucket.
     */
-  def bandKeys(text: String, k: Int, numHashes: Int, bands: Int): Seq[String] = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val t = text.trim.toLowerCase
-    val shingles =
-      if (t.length <= k) Set(t)
-      else (0 to t.length - k).iterator.map(i => t.substring(i, i + k)).toSet
-    val hs = shingles.map(s =>
-      mix64(scala.util.hashing.MurmurHash3.stringHash(s).toLong))
-    val sig = Array.tabulate(numHashes)(j => hs.map(h => mix64(h ^ (j * 0xC2B2AE3D27D4EB4FL))).min)
-    val rows = numHashes / bands
-    (0 until bands).map { b =>
-      val bh = (b * rows until (b + 1) * rows)
-        .foldLeft(-3750763034362895579L)((acc, j) => mix64(acc ^ sig(j)))
-      s"$b:$bh"
-    }
+  def bucketDocs(docs: DataFrame, k: Int, numHashes: Int,
+                 bands: Int): Dataset[BucketDoc] = {
+    import docs.sparkSession.implicits._
+    docs.filter(col("text").isNotNull)
+      .withColumn("__x", Dedup.shingleHashes(col("text"), k))
+      .select(col("doc_id"), col("ts"), col("fp"),
+        explode(Dedup.minhashBands(col("__x"), numHashes, bands)).as("__b"))
+      .select(col("__b.*"), col("doc_id"), col("ts"), col("fp"))
+      .as[BucketDoc]
   }
 
-  /** Incremental near-duplicate detection over an unbounded document
-    * feed: every arriving doc posts into its MinHash band buckets
-    * (`flatMapGroupsWithState` keyed by bucket) and is paired against
-    * the bucket's previous members — a candidate pair is emitted the
-    * moment the SECOND member of a near-dup group arrives, not at the
-    * end of a batch job. The batch twin of this operator is
-    * [[graft.ops.Dedup.minhashLshPairs]]'s candidate stage; exact
-    * verification stays a downstream batch join either way.
+  /** The stateful half of both streams: `flatMapGroupsWithState` keyed
+    * by bucket pairs each arriving document with the bucket's earlier
+    * members, emitting a pair the moment its SECOND member arrives. A
+    * document whose fingerprint the bucket holds is an exact dup: dropped.
     *
     * State is bounded two ways, which is what makes this run forever:
     * event-time timeout drops a bucket once the watermark passes its
-    * last arrival by `ttl` (the "near-dups arrive within T of each
+    * last arrival by `ttlMs` (the "near-dups arrive within T of each
     * other" incremental contract), and `maxPerBucket` freezes hot
     * buckets (the streaming analog of the batch stop-shingle df-cap —
     * a bucket hit by everything carries no signal, and without the cap
     * one hot bucket emits quadratically).
     */
-  def nearDupCandidatesStream(docs: Dataset[DocEvent], k: Int = 8,
-                              numHashes: Int = 16, bands: Int = 4,
-                              watermark: String = "1 hour",
-                              ttlMs: Long = 3600L * 1000L,
-                              maxPerBucket: Int = 64): Dataset[NearDupCand] = {
-    import docs.sparkSession.implicits._
-    val buckets = docs
-      .flatMap(d => bandKeys(d.text, k, numHashes, bands)
-        .map(bk => BucketDoc(bk, d.doc_id, d.ts)))
-      .withWatermark("ts", watermark)
-
-    def update(bucket: String, rows: Iterator[BucketDoc],
+  private def bucketCandidates(buckets: Dataset[BucketDoc], watermark: String,
+                               ttlMs: Long,
+                               maxPerBucket: Int): Dataset[NearDupCand] = {
+    import buckets.sparkSession.implicits._
+    def update(key: (Int, Seq[Long]), rows: Iterator[BucketDoc],
                state: GroupState[BucketState]): Iterator[NearDupCand] = {
       if (state.hasTimedOut) { state.remove(); Iterator.empty }
       else {
         val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id))
-        var ids = state.getOption.map(_.ids).getOrElse(Nil)
+        var st = state.getOption.getOrElse(BucketState(Nil, Nil))
         val out = List.newBuilder[NearDupCand]
         var maxTs = Long.MinValue
         for (r <- sorted) {
           maxTs = math.max(maxTs, r.ts.getTime)
-          if (!ids.contains(r.doc_id) && ids.size < maxPerBucket) {
-            for (o <- ids) out += NearDupCand(math.min(o, r.doc_id),
-              math.max(o, r.doc_id), bucket)
-            ids = r.doc_id :: ids
+          val dup = r.fp != null && st.fps.contains(r.fp)
+          if (!dup && !st.ids.contains(r.doc_id) && st.ids.size < maxPerBucket) {
+            for (o <- st.ids) out += NearDupCand(math.min(o, r.doc_id),
+              math.max(o, r.doc_id), key._1, key._2)
+            st = BucketState(r.doc_id :: st.ids, r.fp :: st.fps)
           }
         }
-        state.update(BucketState(ids))
+        state.update(st)
         if (maxTs != Long.MinValue) state.setTimeoutTimestamp(maxTs + ttlMs)
         out.result().iterator
       }
     }
-
-    buckets.groupByKey(_.bucket)
+    buckets.withWatermark("ts", watermark)
+      .groupByKey(r => (r.band, r.bh))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Batch parity twin of [[nearDupCandidatesStream]]: all within-bucket
-    * pairs over the same Scala bucket keys, cap-free (the reference
-    * answer an unsaturated stream converges to — the spec keeps bucket
-    * occupancy under `maxPerBucket` when comparing).
+  /** Incremental near-duplicate detection over an unbounded document
+    * feed: [[bucketDocs]] then [[bucketCandidates]], with the batch
+    * kernel's geometry; exact verification stays a downstream batch
+    * join, as in [[graft.ops.Dedup.minhashLshPairs]].
+    */
+  def nearDupCandidatesStream(docs: Dataset[DocEvent], k: Int = 8,
+                              numHashes: Int = 32, bands: Int = 8,
+                              watermark: String = "1 hour",
+                              ttlMs: Long = 3600L * 1000L,
+                              maxPerBucket: Int = 64): Dataset[NearDupCand] =
+    bucketCandidates(
+      bucketDocs(docs.toDF().withColumn("fp", lit(null).cast("string")),
+        k, numHashes, bands),
+      watermark, ttlMs, maxPerBucket)
+
+  /** Batch parity twin of [[nearDupCandidatesStream]]: the
+    * [[graft.ops.Dedup.minhashLshPairs]] candidate stage, cap-free (what
+    * an unsaturated stream converges to). Null text forms no bucket.
     */
   def nearDupCandidatesBatch(docs: Dataset[DocEvent], k: Int = 8,
-                             numHashes: Int = 16, bands: Int = 4): DataFrame = {
-    import docs.sparkSession.implicits._
-    val b = docs.flatMap(d => bandKeys(d.text, k, numHashes, bands)
-      .map(bk => (bk, d.doc_id))).toDF("bucket", "id")
-    b.toDF("bucket", "id1").join(b.toDF("bucket", "id2"), Seq("bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2", "bucket")
-  }
+                             numHashes: Int = 32, bands: Int = 8): DataFrame =
+    Dedup.bucketPairs(Dedup.minhashBandStore(
+        docs.toDF().filter(col("text").isNotNull), "doc_id", "text",
+        numHashes, bands, k))
+      .select("id1", "id2", "band", "bh")
 
-  final case class PrepBucketDoc(bucket: String, doc_id: Long,
-                                 ts: java.sql.Timestamp, fp: String)
-  final case class PrepBucketState(ids: List[Long], fps: List[String])
+  /** Both prep twins' stateless front half: quality/language gate, PII
+    * redaction, fingerprint of the REDACTED text — (doc_id, ts, text, fp). */
+  private def prepGate(docs: Dataset[DocEvent], minQuality: Double,
+                       lang: String): DataFrame =
+    docs.toDF()
+      .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
+        TextAnalysis.langId(col("text")) === lang)
+      .select(col("doc_id"), col("ts"),
+        TextAnalysis.redactPii(col("text")).as("text"))
+      // withColumn AFTER the select so the fingerprint sees the
+      // REDACTED text (inside the select above, col("text") would
+      // still resolve to the raw input column)
+      .withColumn("fp", TextAnalysis.fingerprint(col("text")))
 
   /** Composed streaming prep pipeline — the incremental twin of the
-    * batch `pipeline_e2e_prep` front half: quality/language gate and
-    * PII redaction (stateless Column exprs, identical code to the batch
-    * plan), exact dedup on the content fingerprint, then incremental
-    * near-dup candidate detection, emitting a pair the moment the
-    * second member arrives.
+    * batch `pipeline_e2e_prep` front half: [[prepGate]], then exact
+    * dedup on the fingerprint and incremental near-dup candidates,
+    * emitting a pair the moment the second member arrives.
     *
     * The exact dedup is FUSED into the bucket state rather than chained
     * as `dropDuplicatesWithinWatermark` (Spark does not support
@@ -317,72 +315,24 @@ object StreamOps extends Serializable {
     */
   def prepStream(docs: Dataset[DocEvent], minQuality: Double = 0.85,
                  lang: String = "en", watermark: String = "1 hour",
-                 k: Int = 8, numHashes: Int = 16, bands: Int = 4,
+                 k: Int = 8, numHashes: Int = 32, bands: Int = 8,
                  ttlMs: Long = 3600L * 1000L,
-                 maxPerBucket: Int = 64): Dataset[NearDupCand] = {
-    import docs.sparkSession.implicits._
-    import graft.ops.TextAnalysis
-    val gated = docs.toDF()
-      .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-        TextAnalysis.langId(col("text")) === lang)
-      .select(col("doc_id"), col("ts"),
-        TextAnalysis.redactPii(col("text")).as("text"))
-      // withColumn AFTER the select so the fingerprint sees the
-      // REDACTED text (inside the select above, col("text") would
-      // still resolve to the raw input column) — must match prepBatch
-      .withColumn("fp", TextAnalysis.fingerprint(col("text")))
-      .as[(Long, java.sql.Timestamp, String, String)]
-    val buckets = gated
-      .flatMap { case (id, ts, text, fp) =>
-        bandKeys(text, k, numHashes, bands).map(bk => PrepBucketDoc(bk, id, ts, fp))
-      }
-      .withWatermark("ts", watermark)
+                 maxPerBucket: Int = 64): Dataset[NearDupCand] =
+    bucketCandidates(
+      bucketDocs(prepGate(docs, minQuality, lang), k, numHashes, bands),
+      watermark, ttlMs, maxPerBucket)
 
-    def update(bucket: String, rows: Iterator[PrepBucketDoc],
-               state: GroupState[PrepBucketState]): Iterator[NearDupCand] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id))
-        var st = state.getOption.getOrElse(PrepBucketState(Nil, Nil))
-        val out = List.newBuilder[NearDupCand]
-        var maxTs = Long.MinValue
-        for (r <- sorted) {
-          maxTs = math.max(maxTs, r.ts.getTime)
-          val dup = st.fps.contains(r.fp) // exact dup: drop, pair nothing
-          if (!dup && !st.ids.contains(r.doc_id) && st.ids.size < maxPerBucket) {
-            for (o <- st.ids) out += NearDupCand(math.min(o, r.doc_id),
-              math.max(o, r.doc_id), bucket)
-            st = PrepBucketState(r.doc_id :: st.ids, r.fp :: st.fps)
-          }
-        }
-        state.update(st)
-        if (maxTs != Long.MinValue) state.setTimeoutTimestamp(maxTs + ttlMs)
-        out.result().iterator
-      }
-    }
-
-    buckets.groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** Batch parity twin of [[prepStream]]: identical gate/redact Column
-    * exprs, exact dedup keeping the min doc_id per fingerprint
-    * (deterministic where the stream keeps the first arrival — parity
-    * tests compare modulo the duplicate-group representative), then
-    * the cap-free within-bucket pairs.
+  /** Batch parity twin of [[prepStream]]: the same [[prepGate]], exact
+    * dedup keeping the min doc_id per fingerprint (deterministic where
+    * the stream keeps the first arrival — parity tests compare modulo
+    * the duplicate-group representative), then the cap-free
+    * [[nearDupCandidatesBatch]].
     */
   def prepBatch(docs: Dataset[DocEvent], minQuality: Double = 0.85,
-                lang: String = "en", k: Int = 8, numHashes: Int = 16,
-                bands: Int = 4): DataFrame = {
+                lang: String = "en", k: Int = 8, numHashes: Int = 32,
+                bands: Int = 8): DataFrame = {
     import docs.sparkSession.implicits._
-    import graft.ops.TextAnalysis
-    val gated = docs.toDF()
-      .filter(TextAnalysis.qualityScore(col("text")) >= minQuality &&
-        TextAnalysis.langId(col("text")) === lang)
-      .select(col("doc_id"), col("ts"),
-        TextAnalysis.redactPii(col("text")).as("text"))
-      .withColumn("fp", TextAnalysis.fingerprint(col("text")))
+    val gated = prepGate(docs, minQuality, lang)
     val keep = gated.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     val deduped = gated.join(keep, Seq("fp", "doc_id"), "left_semi")
       .select("doc_id", "ts", "text").as[DocEvent]

@@ -4,7 +4,8 @@ import graft.{Sessions, SparkEntry}
 
 /** Dev tool: run one registered query N times with timings and print its
   * formatted physical plan. Usage:
-  *   runMain graft.tools.Explain <queryName> [sfDir] [reps] [--no-aqe]
+  *   runMain graft.tools.Explain <queryName> [sfDir] [reps] [--final]
+  * (AQE off: `SPARK_GRAFT_CONF=spark.sql.adaptive.enabled=false`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -13,12 +14,11 @@ object Explain {
     val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.1"
     val reps = if (pos.length > 2) pos(2).toInt else 3
     val cpus = graft.Env.cpus(default = 32)
-    var b = Sessions.builder(cpus)
-    if (args.contains("--no-aqe")) b = b.config("spark.sql.adaptive.enabled", "false")
-    val spark = b.getOrCreate()
+    val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
-    println(s"=== $name @ $sfDir (aqe=${!args.contains("--no-aqe")}) ===")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    println(s"=== $name @ $sfDir (aqe=$aqe) ===")
     val df = fn(spark, sfDir)
     df.explain("formatted")
     for (i <- 1 to reps) {

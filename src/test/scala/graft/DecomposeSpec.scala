@@ -70,12 +70,69 @@ class DecomposeSpec extends AnyFunSuite {
 
   test("decomposition service memoizes and returns the evaluation") {
     val dec = new Decomposer(relation(chainFixture(0)))
-    val svc = new DecompositionService(spark, dec, workers = 2, cacheMax = 10)
+    val svc = new DecompositionService(spark, dec, workers = 2)
     val tree = JoinTree.build(Vector(AttrSet(0, 1), AttrSet(1, 2, 3)))
     val a = svc.submitJobSynchronous(tree)
     val b = svc.submitJobSynchronous(tree)
     assert(a == b)
+    assert(svc.submitJob(tree) eq svc.submitJob(tree))
+    // a failed evaluation (attribute 9 does not exist) is not memoized:
+    // the retry runs again
+    val bad = JoinTree.build(Vector(AttrSet(0, 9)))
+    val failed = svc.submitJob(bad)
+    assert(scala.util.Try(svc.submitJobSynchronous(bad)).isFailure && failed.isCompleted)
+    assert(svc.submitJob(bad) ne failed)
     svc.shutdown()
+  }
+
+  test("two concurrent misses on one tree run one evaluation") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val tree = JoinTree.build(Vector(AttrSet(0, 1), AttrSet(1, 2, 3)))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    // jobs started in decomposition job groups while `run` ran; the bus
+    // delivers in order, so once a marker job submitted afterwards is
+    // seen, every earlier job start has been counted
+    def decompJobs(run: => Unit): Int = {
+      groups.clear()
+      run
+      val marker = s"marker-${System.nanoTime()}"
+      spark.sparkContext.setJobGroup(marker, marker)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "listener bus did not deliver the marker job")
+      groups.asScala.count(_.startsWith("decomp-"))
+    }
+    def service() =
+      new DecompositionService(spark, new Decomposer(relation(chainFixture(0))), workers = 2)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val alone = decompJobs {
+        val svc = service()
+        svc.submitJobSynchronous(tree)
+        svc.shutdown()
+      }
+      val svc = service()
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+      val together = decompJobs {
+        val clients = (1 to 2).map(_ => new Thread(() => {
+          start.await()
+          results.add(svc.submitJobSynchronous(tree))
+        }))
+        clients.foreach(_.start())
+        clients.foreach(_.join())
+      }
+      svc.shutdown()
+      assert(alone > 0 && together == alone, s"alone=$alone together=$together")
+      assert(results.size == 2 && results.asScala.toSet.size == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("end to end: mine separators, enumerate schemas, evaluate losslessly") {

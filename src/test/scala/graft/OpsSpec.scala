@@ -1070,10 +1070,14 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("ngramNovelty n_shingles equals size(charShingles) per doc") {
-    // ngramNovelty inlines its own shingle explode; this pins it to the
-    // charShingles kernel on the edge cases where two copies would drift
+    // the exploded and the array shingle form share one definition; this
+    // pins them together on the edge cases where two copies would drift,
+    // including Spark's trim (spaces only: a tab / newline stays) and
+    // code-point (not UTF-16) positions
     val texts = Seq(1L -> "", 2L -> "abc", 3L -> "abcdefgh",
-      4L -> "abababababab", 5L -> "  AbCdEfGhIj  ", 6L -> null)
+      4L -> "abababababab", 5L -> "  AbCdEfGhIj  ", 6L -> null,
+      7L -> "\tAbc def \u00e9\ud83d\ude00xy \n",
+      8L -> "\ud83d\ude00" * 10)
     val df = spark.createDataFrame(java.util.Arrays.asList(
       texts.map { case (i, t) => Row(i, t) }: _*),
       StructType(Seq(StructField("doc_id", LongType, nullable = false),
@@ -1081,10 +1085,16 @@ class OpsSpec extends AnyFunSuite {
     val novelty = TextAnalysis.ngramNovelty(df, "doc_id", "text", k = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kernel = df.select(col("doc_id"),
-        size(TextAnalysis.charShingles(col("text"), 8)).cast("long"))
+        size(Dedup.charShingles(col("text"), 8)).cast("long"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (i <- 1L to 5L) assert(novelty.get(i) == kernel.get(i), s"doc $i")
+    val postings = Dedup.shinglePostings(df, "doc_id", "text", 8).distinct()
+      .groupBy(col("id")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(postings == kernel)
+    for (i <- 1L to 8L if i != 6L) assert(novelty.get(i) == kernel.get(i), s"doc $i")
     assert(kernel(4L) == 2L && kernel(5L) == 3L)
+    // 15 code points after trim -> 8 shingles; 10 emoji -> 3 equal shingles
+    assert(kernel(7L) == 8L && kernel(8L) == 1L)
     // null text: the kernel yields [null] (size 1), but ngramNovelty's
     // shingle self-join on s drops the null shingle, so the doc has no row
     assert(kernel(6L) == 1L && !novelty.contains(6L))

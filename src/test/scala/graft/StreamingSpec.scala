@@ -505,6 +505,65 @@ class StreamingSpec extends AnyFunSuite {
       s"missing: ${(batchPairs -- got).take(3)} extra: ${(got -- batchPairs).take(3)}")
   }
 
+  test("stream band slices equal the batch kernel's band store rows") {
+    import spark.implicits._
+    import graft.ops.Dedup
+    val texts = Seq(
+      1L -> "\tAbc def \u00e9\ud83d\ude00xy \n", // Spark's trim keeps tab/newline
+      2L -> "alpha \ud83d\ude00 bravo \ud83d\ude00 charlie", // non-BMP
+      3L -> "",
+      4L -> "abc",      // shorter than k
+      5L -> "abcdefgh", // exactly k
+      6L -> null, 7L -> null)
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    val ds = spark.createDataset(texts.zipWithIndex.map { case ((id, tx), i) =>
+      StreamOps.DocEvent(id, new java.sql.Timestamp(t0 + i * 60000L), tx)
+    })
+    type Slice = (Long, Int, Seq[Option[Long]])
+    def slices(df: org.apache.spark.sql.DataFrame): Set[Slice] =
+      df.select("doc_id", "band", "bh").collect().map(r =>
+        (r.getLong(0), r.getInt(1),
+          r.getSeq[Any](2).map(v => Option(v).map(_.asInstanceOf[Long])))).toSet
+    val kernel = slices(Dedup.minhashBandStore(ds.toDF(), "doc_id", "text")
+      .withColumnRenamed("id", "doc_id"))
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bands").toString
+    ds.toDF().write.mode("overwrite").parquet(tmp)
+    val stream = spark.readStream.schema(ds.toDF().schema).parquet(tmp)
+    val q = StreamOps.bucketDocs(stream.withColumn("fp", lit(null).cast("string")),
+        k = 8, numHashes = 32, bands = 8)
+      .toDF().writeStream.outputMode("append")
+      .format("memory").queryName("graft_bands_out")
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val streamed = slices(spark.table("graft_bands_out"))
+
+    val nullDocs = Set(6L, 7L)
+    assert(streamed == kernel.filterNot(r => nullDocs(r._1)))
+    assert(streamed.map(_._1) == Set(1L, 2L, 3L, 4L, 5L) && streamed.size == 5 * 8)
+    // null text: the kernel's slices are all null — equal to each other,
+    // so a bucket keyed on them would pair the two null docs
+    assert(kernel.filter(r => nullDocs(r._1)).forall(_._3.forall(_.isEmpty)))
+
+    // ... and neither path forms such a bucket
+    val batchPairs = StreamOps.nearDupCandidatesBatch(ds)
+      .select("id1", "id2").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pq = StreamOps.nearDupCandidatesStream(
+        spark.readStream.schema(ds.toDF().schema).parquet(tmp).as[StreamOps.DocEvent])
+      .toDF().writeStream.outputMode("append")
+      .format("memory").queryName("graft_bands_pairs")
+      .start()
+    pq.processAllAvailable()
+    pq.stop()
+    val streamPairs = spark.table("graft_bands_pairs")
+      .select("id1", "id2").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(streamPairs == batchPairs)
+    assert(!batchPairs.exists(p => nullDocs(p._1) || nullDocs(p._2)))
+  }
+
   test("streaming MG candidates cover exact heavies; recount matches batch") {
     import spark.implicits._
     val rng = new Lcg(17)
