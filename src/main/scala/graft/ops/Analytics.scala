@@ -1037,27 +1037,36 @@ object Analytics {
   }
 
   /** Distinct keys per sliding time window (`windowDur` long, advancing
-    * every `slideDur`): the rolling-active-users metric. Uses Spark's
-    * built-in `window()` generator — epoch-aligned starts, each event
-    * fanning out to exactly windowDur/slideDur windows — with an EXACT
-    * distinct count per window. Emits the window start both as a
-    * timestamp and as integer epoch micros (`ws_us`), so the alignment
-    * arithmetic replays in any engine.
+    * every `slideDur`): the rolling-active-users metric, batch or
+    * streaming. Uses Spark's built-in `window()` generator — epoch-aligned
+    * starts, each event fanning out to exactly windowDur/slideDur windows
+    * — with an EXACT distinct count per window. Emits the window start
+    * both as a timestamp and as integer epoch micros (`ws_us`), so the
+    * alignment arithmetic replays in any engine.
+    *
+    * Streaming forbids `count_distinct`, so the count is the
+    * dedup-then-count idiom: dropDuplicates on (window, key), then a
+    * windowed count (null keys dropped first, as `count(DISTINCT)` does).
+    * Streamed, both are append-mode stateful operators bounded by the
+    * 1-hour watermark, which the window struct's event-time metadata
+    * carries: dedup state is (open windows) x (keys active in them), the
+    * count state one long per open window.
     *
     * Scale shape: the fan-out factor is the constant windowDur/slideDur
     * (4 at 24h/6h), applied scan-side by the TimeWindow expression; the
-    * exact distinct then costs the standard two-phase (window, key)
-    * dedup + count. At extreme cardinality swap the distinct for the
-    * streamed KMV/HLL sketches in [[Sketches]] — the windowing plumbing
-    * is unchanged.
+    * batch plan is the standard two-phase (window, key) dedup + count.
+    * At extreme cardinality swap the distinct for the KMV/HLL sketches
+    * in [[Sketches]] — the windowing plumbing is unchanged.
     */
   def slidingDistinct(df: DataFrame, tsCol: String, keyCol: String,
                       windowDur: String, slideDur: String): DataFrame =
-    df.groupBy(window(col(tsCol), windowDur, slideDur).as("w"))
-      .agg(count_distinct(col(keyCol)).as("n_distinct"))
+    df.withWatermark(tsCol, "1 hour")
+      .filter(col(keyCol).isNotNull)
+      .select(window(col(tsCol), windowDur, slideDur).as("w"), col(keyCol))
+      .dropDuplicates("w", keyCol)
+      .groupBy(col("w")).agg(count(lit(1)).as("n_distinct"))
       .select(col("w.start").as("window_start"),
-        unix_micros(col("w.start")).as("ws_us"),
-        col("n_distinct"))
+        unix_micros(col("w.start")).as("ws_us"), col("n_distinct"))
 
   /** Robust outlier flagging via the modified z-score (Iglewicz–Hoaglin):
     * score = 0.6745 · (x − median) / MAD, flagging |score| ≥ `minScore`

@@ -233,11 +233,14 @@ object Dedup {
     * engine-portable (md5 + 64-bit modular arithmetic), so the DuckDB
     * oracle re-derives exact signatures — see `dedup_minhash_lsh`'s
     * oracle. xxhash64 would tie signatures to Spark's implementation.
+    * A null text's only shingle is null: it is dropped, so such a
+    * document has no signature and no band rows.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, k: Int): DataFrame = {
     // hash each shingle string once
     val post = shinglePostings(df, idCol, textCol, k)
+      .filter(col("s").isNotNull)
       .select(col("id"), shingleHash(col("s")).as("x"))
     val perm = minhashPerms(numHashes)
     post.groupBy(col("id")).agg(
@@ -245,17 +248,18 @@ object Dedup {
       (1 until numHashes).map(j => min(perm(j)(col("x"))).as(s"sig_$j")): _*)
   }
 
-  /** Per row, the family's hashes of a text's distinct shingles: the
-    * input of [[minhashBands]], its own column so md5 runs once. */
+  /** Per row, the family's hashes of a text's distinct non-null
+    * shingles: the input of [[minhashBands]], its own column so md5 runs
+    * once. */
   def shingleHashes(text: Column, k: Int): Column =
-    transform(charShingles(text, k), shingleHash(_))
+    filter(transform(charShingles(text, k), shingleHash(_)), _.isNotNull)
 
   /** Per row, a document's band slices from its [[shingleHashes]] —
-    * equal to its [[minhashBandStore]] rows — for a stream that cannot
-    * aggregate before bucketing. */
+    * equal to its [[minhashBandStore]] rows, so null (no hashes) for null
+    * text — for a stream that cannot aggregate before bucketing. */
   def minhashBands(hashes: Column, numHashes: Int, bands: Int): Column =
-    bandSlices(minhashPerms(numHashes).map(p => array_min(transform(hashes, p))),
-      bands)
+    when(size(hashes) > 0, bandSlices(
+      minhashPerms(numHashes).map(p => array_min(transform(hashes, p))), bands))
 
   /** The persistable MinHash band index of a corpus: one row per
     * (document, band) with the band's raw signature slice —

@@ -213,6 +213,14 @@ object Sketches {
       .groupBy("key").agg(min("cnt").as("cms_est"))
   }
 
+  /** One KMV step: fold hash `h` into a TreeSet capped at the k
+    * smallest. Shared by the batch per-partition pass and the streaming
+    * per-shard state, like [[mgStep]].
+    */
+  def kmvStep(set: java.util.TreeSet[java.lang.Long], h: Long, k: Int): Unit =
+    if (set.size < k) set.add(h)
+    else if (h < set.last()) { if (set.add(h)) set.pollLast() }
+
   /** K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002;
     * unbiased estimator from Beyer et al., SIGMOD 2007): the k smallest
     * distinct values of a pinned 32-bit hash (first 8 md5 hex chars —
@@ -239,10 +247,7 @@ object Sketches {
       .as[Long]
       .mapPartitions { it =>
         val set = new java.util.TreeSet[java.lang.Long]()
-        it.foreach { h =>
-          if (set.size < k) set.add(h)
-          else if (h < set.last()) { if (set.add(h)) set.pollLast() }
-        }
+        it.foreach(kmvStep(set, _, k))
         import scala.jdk.CollectionConverters._
         set.iterator().asScala.map(_.longValue())
       }

@@ -85,6 +85,14 @@ object Stats {
       sumCols.flatMap(c => Seq(s"__cum_$c", s"__o_$c"))): _*)
   }
 
+  /** A band's Jeffreys-smoothed proportion (cnt + 0.5)/(tot + 0.5·bins),
+    * as in [[psiDrift]] and the streaming PSI monitor. */
+  def jeffreysProp(cnt: Column, tot: Column, bins: Int): Column =
+    (cnt + lit(0.5)) / (tot + lit(0.5 * bins))
+
+  /** A band's PSI term (pc − pb)·ln(pc/pb). */
+  def psiTerm(pc: Column, pb: Column): Column = (pc - pb) * log(pc / pb)
+
   /** Population Stability Index between a baseline and a current
     * population of `valueCol`, over `bins` quantile bands fitted on the
     * BASELINE side (the industry scorecard-drift metric: PSI < 0.1
@@ -137,12 +145,9 @@ object Stats {
     val tots = cells.agg(sum(col("cnt_base")).cast("double").as("__tb"),
       sum(col("cnt_cur")).cast("double").as("__tc"))
     val contrib = cells.crossJoin(broadcast(tots))
-      .withColumn("__pb",
-        (col("cnt_base") + lit(0.5)) / (col("__tb") + lit(0.5 * bins)))
-      .withColumn("__pc",
-        (col("cnt_cur") + lit(0.5)) / (col("__tc") + lit(0.5 * bins)))
-      .withColumn("__x",
-        (col("__pc") - col("__pb")) * log(col("__pc") / col("__pb")))
+      .withColumn("__pb", jeffreysProp(col("cnt_base"), col("__tb"), bins))
+      .withColumn("__pc", jeffreysProp(col("cnt_cur"), col("__tc"), bins))
+      .withColumn("__x", psiTerm(col("__pc"), col("__pb")))
     val total = contrib.agg(sum(col("__x")).as("__psi"))
     contrib.crossJoin(broadcast(total))
       .select(col("bin"), col("lo"), col("hi"), col("cnt_base"),
@@ -580,29 +585,41 @@ object Stats {
     * DOMAIN (hours of the experiment — thousands, not rows), so the
     * unpartitioned window is deliberate and bounded.
     */
+  def sprtMonitor(df: DataFrame, unitCol: Column, tsCol: String,
+                  isSuccess: Column, p0: Double, p1: Double,
+                  alpha: Double, beta: Double,
+                  salt: String = "sprt"): DataFrame =
+    sprtFinish(sprtHourly(df, unitCol, tsCol, isSuccess, salt),
+      p0, p1, alpha, beta)
+
   /** The pinned md5 treatment-arm bit shared by [[cuped]]-style
-    * experiment ops and the streaming twin: 1 = treatment.
+    * experiment ops and [[sprtHourly]]: 1 = treatment.
     */
   def treatmentArm(unitCol: Column, salt: String): Column =
     (conv(substring(md5(concat(lit(salt), lit(":"),
       unitCol.cast("string"))), 1, 8), 16, 10).cast("long") % 2).cast("int")
 
-  def sprtMonitor(df: DataFrame, unitCol: Column, tsCol: Column,
-                  isSuccess: Column, p0: Double, p1: Double,
-                  alpha: Double, beta: Double,
-                  salt: String = "sprt"): DataFrame = {
-    val buckets = df.filter(treatmentArm(unitCol, salt) === 1)
-      .groupBy(date_trunc("hour", tsCol).as("bucket"))
+  /** The arm-B (bucket, trials, successes) per tumbling event-time hour
+    * under [[sprtMonitor]], batch or streaming. Streamed, it runs in
+    * append mode and emits each hour once the 1-hour watermark closes
+    * it. The cumulative LLR is deliberately NOT computed in-stream:
+    * running totals from the stream's beginning would be a single-key
+    * unbounded state. The closed hours land in a sink and
+    * [[sprtFinish]] applies the boundary math over that (hour-domain)
+    * table, replaying the batch monitor on every closed hour.
+    */
+  def sprtHourly(df: DataFrame, unitCol: Column, tsCol: String,
+                 isSuccess: Column, salt: String = "sprt"): DataFrame =
+    df.withWatermark(tsCol, "1 hour")
+      .filter(treatmentArm(unitCol, salt) === 1)
+      .groupBy(window(col(tsCol), "1 hour").as("w"))
       .agg(count(lit(1)).as("trials"),
-        coalesce(sum(when(isSuccess, 1L).otherwise(0L)), lit(0L))
-          .as("successes"))
-    sprtFinish(buckets, p0, p1, alpha, beta)
-  }
+        sum(when(isSuccess, 1L).otherwise(0L)).as("successes"))
+      .select(col("w.start").as("bucket"), col("trials"), col("successes"))
 
   /** The LLR/boundary tail of [[sprtMonitor]] over an already-bucketed
-    * (bucket, trials, successes) table — shared with the streaming
-    * twin, whose hourly counts arrive from a stateful append sink and
-    * get the identical finishing math batch-side.
+    * (bucket, trials, successes) table, e.g. a streamed [[sprtHourly]]
+    * sink.
     */
   def sprtFinish(buckets: DataFrame, p0: Double, p1: Double,
                  alpha: Double, beta: Double): DataFrame = {

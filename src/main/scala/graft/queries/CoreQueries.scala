@@ -328,8 +328,7 @@ object CoreQueries {
     // the ONE shared batch/stream definition (StreamOps documents the
     // parity contract) — never re-implement the window agg inline here
     graft.streaming.StreamOps.hourlyAgg(
-      Tables.events(s, dir).select("ts", "event_type", "value"),
-      withWatermark = false)
+      Tables.events(s, dir).select("ts", "event_type", "value"))
 
   private val evHourlySql =
     """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,

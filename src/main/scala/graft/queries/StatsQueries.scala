@@ -423,7 +423,7 @@ object StatsQueries {
     * arguments.
     */
   private def evSprtMonitor(s: SparkSession, dir: String): DataFrame =
-    Stats.sprtMonitor(Tables.events(s, dir), col("event_id"), col("ts"),
+    Stats.sprtMonitor(Tables.events(s, dir), col("event_id"), "ts",
       col("event_type") === "purchase", p0 = 0.19, p1 = 0.21,
       alpha = 0.05, beta = 0.10)
 
@@ -508,20 +508,6 @@ object StatsQueries {
       |         (CAST(sx AS DOUBLE) / n - gm), 6) AS shrunk_mean,
       |       round(sigma2, 6) AS sigma2, round(tau2, 6) AS tau2
       |FROM grp CROSS JOIN g3""".stripMargin
-
-  /** The streaming SPRT path run in batch mode: the ONE shared
-    * hourly-count definition ([[graft.streaming.StreamOps
-    * .sprtHourlyStream]], append-mode under a watermark when streamed)
-    * finished by the same boundary math — must equal `ev_sprt_monitor`
-    * exactly, and shares its oracle. StreamingSpec drives the real
-    * streamed run.
-    */
-  private def evSprtStreamTwin(s: SparkSession, dir: String): DataFrame =
-    Stats.sprtFinish(
-      graft.streaming.StreamOps.sprtHourlyStream(
-        Tables.events(s, dir), "ts", "event_id", "event_type",
-        "purchase", "sprt", withWatermark = false),
-      p0 = 0.19, p1 = 0.21, alpha = 0.05, beta = 0.10)
 
   /** Day-part uplift readout of the same pinned event-level experiment
     * as `ev_sprt_monitor` — see [[graft.ops.Stats.upliftBySegment]].
@@ -1799,8 +1785,6 @@ object StatsQueries {
     QueryDef("ev_did_estimate", evDidEstimate, Some(evDidEstimateSql)),
     QueryDef("li_corr_matrix", liCorrMatrix, Some(liCorrMatrixSql)),
     QueryDef("ev_sprt_monitor", evSprtMonitor, Some(evSprtMonitorSql)),
-    QueryDef("ev_sprt_stream_twin", evSprtStreamTwin,
-      Some(evSprtMonitorSql)),
     QueryDef("ev_uplift_daypart", evUpliftDaypart,
       Some(evUpliftDaypartSql)),
     QueryDef("ev_ks_drift", evKsDrift, Some(evKsDriftSql)),

@@ -1,32 +1,48 @@
 package graft.streaming
 
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{Dedup, Sketches, Stats, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured-Streaming shapes of the engine's event-table operators:
-  * the same tumbling-window aggregation the batch query `ev_hourly_window`
-  * computes, expressed over a stream with a watermark so state is bounded
-  * on an unbounded 100 TB-scale feed. The batch and streaming plans share
-  * this one definition — parity between them is tested by running the
+/** The streaming operators a batch plan cannot express. Catalyst plans
+  * one logical plan whether its input is batch or streaming, so an
+  * operator that is a plain projection or aggregation needs no twin: its
+  * batch definition runs on `spark.readStream` frames unchanged. What is
+  * left here is state a per-micro-batch batch call cannot carry — the
+  * `flatMapGroupsWithState` folds (sessions, near-dup buckets, prep, MG
+  * and KMV shards, CDC upsert, as-of, transition steps), the pinned-edge
+  * PSI monitor and the stream-stream interval join — plus [[hourlyAgg]]
+  * and [[sessionizeBatch]], the batch definitions of `ev_hourly_window`
+  * and `ev_sessionize`. Parity with batch is tested by running each
   * stream over the same parquet input with `processAllAvailable`.
+  *
+  * An event-time operator calls `withWatermark` unconditionally: on a
+  * batch frame Spark's `EliminateEventTimeWatermark` rule drops the node,
+  * so the batch plan is the one without it (pinned by StreamingSpec).
   *
   * ==Which operators stream, and which deliberately do not==
   *
-  * The library's document/text operators split into two classes, and
-  * the boundary is a property of the STATISTIC, not an implementation
-  * gap:
+  * The library's operators split into two classes, and the boundary is a
+  * property of the STATISTIC, not an implementation gap:
   *
   *  - '''Ingest-time''' ops read one row (or one bounded window) at a
-  *    time: per-doc gates (Gopher rules + repetition, FineWeb lines,
-  *    C4 cleaning, encoding audit, PII redaction, readability,
-  *    fingerprints), windowed aggregations, and bounded-state sketches
-  *    (Misra-Gries, CMS, KMV). These have streaming twins here —
-  *    stateless append passes or watermark-bounded state — and the
-  *    twin IS the batch definition (same function), so parity is
-  *    definitional.
+  *    time. These stream as the batch operator itself, called on the
+  *    streaming frame:
+  *    - per-doc gates and audits, stateless append passes:
+  *      [[graft.ops.TextAnalysis.gopherRules]], `gopherRepetition`,
+  *      `fineWebRules`, `piiLuhnAudit`, `fimSplit`;
+  *    - additive rollups in complete mode:
+  *      [[graft.ops.TextAnalysis.encodingAudit]],
+  *      [[graft.ops.Analytics.dqSuite]] (not its DISTINCT constraints),
+  *      the CMS, HLL and AMS cells of [[graft.ops.Sketches]];
+  *    - watermarked windows in append mode: [[hourlyAgg]],
+  *      [[graft.ops.Analytics.slidingDistinct]],
+  *      [[graft.ops.Stats.sprtHourly]] (finished batch-side by
+  *      [[graft.ops.Stats.sprtFinish]] over the closed-hour sink);
+  *    - exact dedup within a horizon: Spark's own
+  *      `withWatermark(...).dropDuplicatesWithinWatermark(keys)`.
   *
   *  - '''Corpus-time''' ops are functions of a completed corpus:
   *    CCNet head/middle/tail tiering needs the per-language LM-score
@@ -47,47 +63,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamOps extends Serializable {
 
-  /** Tumbling-window counts/sums per event type. Works on a batch OR
-    * streaming DataFrame with columns (ts: timestamp, event_type, value).
+  /** Tumbling-window counts/sums per event type over (ts: timestamp,
+    * event_type, value), batch or streaming (append mode under a 1-hour
+    * watermark).
     */
-  def hourlyAgg(events: DataFrame, withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "1 hour") else events
-    src.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+  def hourlyAgg(events: DataFrame): DataFrame =
+    events.withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("cnt"), col("sum_value"))
-  }
-
-  /** Sliding-window exact distinct count (the rolling-active-users
-    * metric) over a stream: streaming forbids `count_distinct`, so the
-    * exact form is the dedup-then-count idiom — dropDuplicates on
-    * (window, key), then a windowed count — two chained stateful
-    * operators (append mode, supported since Spark 3.4). The window
-    * struct carries event-time metadata, so BOTH state stores are
-    * watermark-bounded: dedup state drops once the watermark passes a
-    * window, and the count state emits-and-drops the same way. Batch
-    * twin of `ev_sliding_active_users`: on a batch frame the identical
-    * plan degenerates to distinct + count.
-    *
-    * Scale shape: the per-event fan-out is the constant
-    * windowDur/slideDur; dedup state is (open windows) x (keys active
-    * in them) — the metric's intrinsic working set — and the count
-    * state is one long per open window.
-    */
-  def slidingDistinctStream(events: DataFrame, tsCol: String,
-                            keyCol: String, windowDur: String,
-                            slideDur: String,
-                            withWatermark: Boolean): DataFrame = {
-    val src =
-      if (withWatermark) events.withWatermark(tsCol, "1 hour") else events
-    src
-      .select(col(tsCol),
-        window(col(tsCol), windowDur, slideDur).as("w"), col(keyCol))
-      .dropDuplicates("w", keyCol)
-      .groupBy(col("w")).agg(count(lit(1)).as("n_distinct"))
-      .select(col("w.start").as("window_start"),
-        unix_micros(col("w.start")).as("ws_us"), col("n_distinct"))
-  }
 
   /** Streaming PSI drift monitor: per tumbling window, the Population
     * Stability Index of `valueCol` against a PINNED baseline — band
@@ -96,34 +81,30 @@ object StreamOps extends Serializable {
     * [[graft.ops.Stats.psiDrift]]), because a streaming monitor cannot
     * re-derive its reference mid-stream; re-fitting is a deploy, not a
     * micro-batch. Same band arithmetic as the batch op: strictly-greater
-    * on the 6dp value, Jeffreys-smoothed current proportions
-    * (cnt + 0.5)/(tot + 0.5·bins).
+    * on the 6dp value, then [[graft.ops.Stats.jeffreysProp]] and
+    * [[graft.ops.Stats.psiTerm]].
     *
     * Two chained stateful aggregations (Spark 3.4+ multi-stateful
-    * support, the `slidingDistinctStream` idiom): (window, band) counts,
-    * then a per-window rollup carrying the band counts as a ≤ bins-sized
-    * list. Bands ABSENT from a window still contribute their smoothed
-    * penalty: the final PSI folds over the full literal band list,
-    * looking each band's count up in the collected list (0 if absent) —
-    * no spine join, which streaming could not express. State is
-    * watermark-bounded: bins per open window + one rollup row.
-    * Works on a batch frame too, where the identical plan degenerates
-    * to two grouped aggregations.
+    * support): (window, band) counts, then a per-window rollup carrying
+    * the band counts as a ≤ bins-sized list. Bands ABSENT from a window
+    * still contribute their smoothed penalty: the final PSI folds over
+    * the full literal band list, looking each band's count up in the
+    * collected list (0 if absent) — no spine join, which streaming could
+    * not express. State is watermark-bounded: bins per open window + one
+    * rollup row. On a batch frame the same plan is two grouped
+    * aggregations.
     */
   def psiDriftStream(events: DataFrame, tsCol: String, valueCol: String,
                      edges: Seq[Double], baseProps: Seq[Double],
-                     windowDur: String,
-                     withWatermark: Boolean): DataFrame = {
+                     windowDur: String): DataFrame = {
     val bins = edges.size + 1
     require(baseProps.size == bins,
       s"need ${bins} baseline proportions, got ${baseProps.size}")
-    val src =
-      if (withWatermark) events.withWatermark(tsCol, "1 hour") else events
     val v6 = round(col(valueCol), 6)
     val band = edges.foldLeft(lit(1)) { (acc, e) =>
       acc + when(v6 > lit(e), 1).otherwise(0)
     }
-    val counts = src
+    val counts = events.withWatermark(tsCol, "1 hour")
       .select(window(col(tsCol), windowDur).as("w"), band.as("band"))
       .groupBy(col("w"), col("band"))
       .agg(count(lit(1)).as("cnt"))
@@ -141,52 +122,13 @@ object StreamOps extends Serializable {
       val hit = filter(col("bl"), x => x.getField("band") === b.getField("band"))
       val cnt = when(size(hit) > 0,
         element_at(hit, 1).getField("cnt")).otherwise(lit(0L))
-      val pc = (cnt + lit(0.5)) / (col("tot") + lit(0.5 * bins))
-      acc + (pc - b.getField("pb")) * log(pc / b.getField("pb"))
+      acc + Stats.psiTerm(Stats.jeffreysProp(cnt, col("tot"), bins),
+        b.getField("pb"))
     })
     rolled.select(col("w.start").as("window_start"),
       unix_micros(col("w.start")).as("ws_us"),
       col("tot").as("n"), round(psi, 6).as("psi"))
   }
-
-  /** Streaming hourly SPRT trial counts: the arm-B (trials, successes)
-    * per event-time hour, append-mode once the watermark closes each
-    * hour — the streaming HALF of the sequential A/B monitor. The
-    * cumulative LLR is deliberately NOT computed in-stream: running
-    * totals from the stream's beginning would mean a single-key
-    * unbounded state (no parallelism, state never droppable); instead
-    * the closed hourly rows land in a sink and
-    * [[graft.ops.Stats.sprtFinish]] applies the identical boundary
-    * math over the (tiny, hour-domain) sink table — bounded state, and
-    * the finishing step replays bit-for-bit against the batch
-    * [[graft.ops.Stats.sprtMonitor]]. Same pinned md5 arm, same
-    * tumbling hour (window start == date_trunc), so stream == batch
-    * row-for-row on closed hours.
-    */
-  def sprtHourlyStream(events: DataFrame, tsCol: String, unitCol: String,
-                       typeCol: String, successType: String,
-                       salt: String,
-                       withWatermark: Boolean): DataFrame = {
-    val src =
-      if (withWatermark) events.withWatermark(tsCol, "1 hour") else events
-    src.filter(graft.ops.Stats.treatmentArm(col(unitCol), salt) === 1)
-      .groupBy(window(col(tsCol), "1 hour").as("w"))
-      .agg(count(lit(1)).as("trials"),
-        sum(when(col(typeCol) === successType, 1L).otherwise(0L))
-          .as("successes"))
-      .select(col("w.start").as("bucket"), col("trials"),
-        col("successes"))
-  }
-
-  /** Streaming exact dedup: first occurrence per key within the
-    * watermark horizon (state for a key is droppable once the watermark
-    * passes it — bounded state on an unbounded feed). Works on batch
-    * DataFrames too, where it degenerates to plain dropDuplicates.
-    */
-  def streamingDedup(events: DataFrame, keyCols: Seq[String],
-                     tsCol: String, watermark: String): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   // ---- incremental near-dup detection ----
 
@@ -205,8 +147,7 @@ object StreamOps extends Serializable {
   def bucketDocs(docs: DataFrame, k: Int, numHashes: Int,
                  bands: Int): Dataset[BucketDoc] = {
     import docs.sparkSession.implicits._
-    docs.filter(col("text").isNotNull)
-      .withColumn("__x", Dedup.shingleHashes(col("text"), k))
+    docs.withColumn("__x", Dedup.shingleHashes(col("text"), k))
       .select(col("doc_id"), col("ts"), col("fp"),
         explode(Dedup.minhashBands(col("__x"), numHashes, bands)).as("__b"))
       .select(col("__b.*"), col("doc_id"), col("ts"), col("fp"))
@@ -279,8 +220,7 @@ object StreamOps extends Serializable {
     */
   def nearDupCandidatesBatch(docs: Dataset[DocEvent], k: Int = 8,
                              numHashes: Int = 32, bands: Int = 8): DataFrame =
-    Dedup.bucketPairs(Dedup.minhashBandStore(
-        docs.toDF().filter(col("text").isNotNull), "doc_id", "text",
+    Dedup.bucketPairs(Dedup.minhashBandStore(docs.toDF(), "doc_id", "text",
         numHashes, bands, k))
       .select("id1", "id2", "band", "bh")
 
@@ -374,32 +314,6 @@ object StreamOps extends Serializable {
       .drop("sid")
   }
 
-  /** Sessionization via Spark's NATIVE `session_window` operator —
-    * the built-in path, same output shape as [[sessionizeBatch]], batch
-    * or streaming (append mode emits a session once the watermark
-    * closes it). Boundary semantics differ by a half-open interval: a
-    * session window spans [start, last + gap), so an event arriving
-    * EXACTLY gap after the last starts a new session, where
-    * [[sessionizeBatch]]'s `diff > gap` rule keeps it. Identical on any
-    * feed without exact-gap collisions (microsecond-timestamped
-    * reality); prefer this form unless custom in-session state is
-    * needed, in which case [[sessionizeStream]]'s
-    * `flatMapGroupsWithState` is the extension point.
-    */
-  def sessionizeNative(events: DataFrame, gapMinutes: Int,
-                       withWatermark: Boolean): DataFrame = {
-    val src = if (withWatermark) events.withWatermark("ts", "1 hour")
-              else events
-    src.groupBy(session_window(col("ts"), s"$gapMinutes minutes"),
-        col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 4).as("sum_value"))
-      .select(col("user_id"),
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("session_start"),
-        col("n_events"), col("sum_value"))
-  }
-
   /** Streaming sessionization: the same sessions over an unbounded feed
     * via `flatMapGroupsWithState` with event-time timeout — per-user
     * state is one open session (constant memory per key), closed and
@@ -486,7 +400,7 @@ object StreamOps extends Serializable {
                state: GroupState[MgShardState]): Iterator[MgShardCandidates] = {
       val st = state.getOption.getOrElse(MgShardState(Map.empty, 0L))
       val counters = scala.collection.mutable.HashMap.from(st.counters)
-      rows.foreach(graft.ops.Sketches.mgStep(counters, _, k))
+      rows.foreach(Sketches.mgStep(counters, _, k))
       val next = MgShardState(counters.toMap, st.seq + 1)
       state.update(next)
       Iterator.single(
@@ -526,9 +440,10 @@ object StreamOps extends Serializable {
   final case class KmvShardState(mins: Seq[Long], seq: Long)
   final case class KmvShardSketch(shard: Int, seq: Long, mins: Seq[Long])
 
-  /** Streaming KMV distinct-count summary: each shard keeps the k
-    * smallest hashes it has seen (set semantics — re-deliveries and
-    * duplicates are free), emitting its current summary per
+  /** Streaming KMV distinct-count summary: each shard folds
+    * [[graft.ops.Sketches.kmvStep]] — the batch per-partition pass — to
+    * keep the k smallest hashes it has seen (set semantics —
+    * re-deliveries and duplicates are free), emitting its current summary per
     * micro-batch. Merging the latest per-shard summaries (union +
     * re-truncate, [[graft.ops.Sketches.kmvMerge]] algebra) yields
     * EXACTLY the batch [[graft.ops.Sketches.kmvMinHashes]] of the
@@ -550,10 +465,7 @@ object StreamOps extends Serializable {
       val st = state.getOption.getOrElse(KmvShardState(Nil, 0L))
       val set = new java.util.TreeSet[java.lang.Long]()
       st.mins.foreach(set.add(_))
-      rows.foreach { h =>
-        if (set.size < k) set.add(h)
-        else if (h < set.last()) { if (set.add(h)) set.pollLast() }
-      }
+      rows.foreach(Sketches.kmvStep(set, _, k))
       import scala.jdk.CollectionConverters._
       val mins = set.iterator().asScala.map(_.longValue()).toSeq
       val next = KmvShardState(mins, st.seq + 1)
@@ -745,88 +657,4 @@ object StreamOps extends Serializable {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }
-
-  /** Streaming data-quality monitor: [[graft.ops.Analytics.dqSuite]]
-    * verbatim over a streaming DataFrame — the definition is SHARED, so
-    * batch and stream cannot drift. Run it in complete output mode: the
-    * global aggregate is one state row per metric, updated every
-    * micro-batch, and the constraint explode is a stateless projection
-    * over that row. Restriction vs the batch suite: constraints needing
-    * DISTINCT aggregates (exact uniqueness) are not streamable —
-    * monitor cardinality with the streaming KMV sketch instead and keep
-    * exact uniqueness in the batch audit.
-    */
-  def dqMonitorStream(df: DataFrame,
-                      aggs: Seq[org.apache.spark.sql.Column],
-                      constraints: Seq[graft.ops.Analytics.Constraint]): DataFrame =
-    graft.ops.Analytics.dqSuite(df, aggs, constraints)
-
-  /** Streaming Gopher quality gate: the batch rule set unchanged —
-    * every rule is a stateless scan-side projection over the one row
-    * (exact-integer verdicts, no aggregate, no window), so the SAME
-    * plan runs append-mode with zero state and per-row latency; this
-    * is the gate a streaming ingest pipeline applies before paying for
-    * fingerprinting. Parity with [[graft.ops.TextAnalysis.gopherRules]]
-    * is definitional (same code) and pinned by StreamingSpec.
-    */
-  def gopherGateStream(docs: DataFrame, idCol: String,
-                       textCol: String): DataFrame =
-    graft.ops.TextAnalysis.gopherRules(docs, idCol, textCol)
-
-  /** Streaming encoding-health monitor: the batch detector unchanged —
-    * the per-doc marker counts (U+FFFD replacement chars, mojibake
-    * pairs, control bytes) are stateless scan-side projections, and
-    * the per-source rollup is additive counts, so the SAME plan runs
-    * complete-mode with one bounded state row per source and the audit
-    * table updates every micro-batch. Ingest time is where an encoding
-    * regression is actually caught — the batch audit
-    * ([[graft.ops.TextAnalysis.encodingAudit]], `text_encoding_audit`)
-    * only post-mortems it. Parity is definitional (same code) and
-    * pinned by StreamingSpec, corruption branches live.
-    */
-  def encodingAuditStream(docs: DataFrame, grpCol: String,
-                          textCol: String): DataFrame =
-    graft.ops.TextAnalysis.encodingAudit(docs, grpCol, textCol)
-
-  /** Streaming Gopher REPETITION gate: the batch rule set unchanged —
-    * every signal (dup-line mass, top/dup-k-gram char coverage) is a
-    * per-row sorted-gram run fold with no aggregate, no window, no
-    * state, so the SAME plan runs append-mode with per-row latency.
-    * Together with [[gopherGateStream]] this puts BOTH halves of the
-    * Rae 2021 table A1 filter at ingest time. Parity is definitional
-    * (same code) and pinned by StreamingSpec with repetition plants.
-    */
-  def gopherRepetitionStream(docs: DataFrame, idCol: String,
-                             textCol: String): DataFrame =
-    graft.ops.TextAnalysis.gopherRepetition(docs, idCol, textCol)
-
-  /** Streaming FineWeb-style line gate: stateless per-row line
-    * analysis ([[graft.ops.TextAnalysis.fineWebRules]]), append-mode,
-    * zero state. Parity definitional, pinned by StreamingSpec.
-    */
-  def fineWebGateStream(docs: DataFrame, idCol: String,
-                        textCol: String): DataFrame =
-    graft.ops.TextAnalysis.fineWebRules(docs, idCol, textCol)
-
-  /** Streaming Luhn payment-card audit: stateless per-row regex +
-    * integer checksum ([[graft.ops.TextAnalysis.piiLuhnAudit]]),
-    * append-mode, zero state — the redaction gate belongs at INGEST,
-    * before a card number is ever persisted, which is exactly the
-    * ingest-time class documented in the header. Parity definitional,
-    * pinned by StreamingSpec.
-    */
-  def piiLuhnStream(docs: DataFrame, idCol: String,
-                    textCol: String): DataFrame =
-    graft.ops.TextAnalysis.piiLuhnAudit(docs, idCol, textCol)
-
-  /** Streaming FIM augmentation: the transform is pure per-row md5
-    * arithmetic + substring rendering ([[graft.ops.TextAnalysis
-    * .fimSplit]]) — no aggregate, no state — so the SAME plan runs
-    * append-mode at ingest, where a code-model pipeline actually
-    * applies FIM (per arriving document, before writing the training
-    * shard). Parity definitional, pinned by StreamingSpec.
-    */
-  def fimSplitStream(docs: DataFrame, idCol: String, textCol: String,
-                     rate: Double, minChars: Int): DataFrame =
-    graft.ops.TextAnalysis.fimSplit(docs, idCol, textCol, rate, minChars)
 }

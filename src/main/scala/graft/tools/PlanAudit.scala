@@ -172,7 +172,6 @@ object PlanAudit {
     "ev_seasonal_decompose" -> "moving average over the daily rollup",
     "ev_spearman_daily" -> "rank windows over the daily rollup",
     "ev_sprt_monitor" -> "cumulative over the bucket sequence",
-    "ev_sprt_stream_twin" -> "cumulative over the bucket sequence",
     "ev_survival_km" -> "at-risk cumulative over the duration domain",
     "ev_value_quantiles" -> "cumulative over fixed histogram bins",
     "emb_isotonic_calibration" -> "PAVA passes over the score-bin grid",

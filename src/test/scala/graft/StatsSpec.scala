@@ -524,7 +524,7 @@ class StatsSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(when(col("succ"), 1L).otherwise(0L))
         .as("k"))
       .orderBy("h").collect().map(r => (r.getLong(1), r.getLong(2)))
-    val got = Stats.sprtMonitor(df, col("id"), col("ts"), col("succ"),
+    val got = Stats.sprtMonitor(df, col("id"), "ts", col("succ"),
         p0 = 0.19, p1 = 0.21, alpha = 0.05, beta = 0.10)
       .orderBy("bucket").collect()
     assert(got.length == 3)

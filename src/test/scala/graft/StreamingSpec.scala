@@ -11,7 +11,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val batchEvents = Tables.events(spark, dir)
       .select("ts", "event_type", "value")
-    val expected = StreamOps.hourlyAgg(batchEvents, withWatermark = false)
+    val expected = StreamOps.hourlyAgg(batchEvents)
       .collect().map(_.toSeq).toSet
 
     // drive the same parquet through a real streaming query
@@ -20,7 +20,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = spark.readStream
       .schema(batchEvents.schema)
       .parquet(tmp)
-    val q = StreamOps.hourlyAgg(stream, withWatermark = true)
+    val q = StreamOps.hourlyAgg(stream)
       .writeStream.outputMode("append")
       .format("memory").queryName("graft_stream_out")
       .start()
@@ -41,7 +41,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val batchEvents = Tables.events(spark, dir)
       .select("ts", "event_type", "value")
-    val expected = StreamOps.hourlyAgg(batchEvents, withWatermark = false)
+    val expected = StreamOps.hourlyAgg(batchEvents)
       .collect().map(_.toSeq).toSet
 
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
@@ -51,8 +51,7 @@ class StreamingSpec extends AnyFunSuite {
     val h2 = batchEvents.filter(col("ts") >= "2024-01-15")
     h1.write.mode("overwrite").parquet(srcDir)
     def start() = StreamOps.hourlyAgg(
-        spark.readStream.schema(batchEvents.schema).parquet(srcDir),
-        withWatermark = true)
+        spark.readStream.schema(batchEvents.schema).parquet(srcDir))
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .format("parquet").option("path", outDir).start()
@@ -69,25 +68,45 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.length >= expected.size - TextishSlack(expected.size))
   }
 
+  test("the event-time watermark is dropped from batch plans") {
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    val ev = spark.range(12).select(timestamp_seconds(col("id") * 600).as("ts"),
+      col("id").as("event_id"), lit("purchase").as("event_type"),
+      (col("id") % 3).as("user_id"), col("id").cast("double").as("value"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-wm").toString
+    ev.write.mode("overwrite").parquet(tmp)
+    val stream = spark.readStream.schema(ev.schema).parquet(tmp)
+    def ops(df: org.apache.spark.sql.DataFrame) = Seq(
+      StreamOps.hourlyAgg(df.select("ts", "event_type", "value")),
+      graft.ops.Analytics.slidingDistinct(df, "ts", "user_id", "24 hours", "6 hours"),
+      graft.ops.Stats.sprtHourly(df, col("event_id"), "ts",
+        col("event_type") === "purchase"))
+    def watermarked(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.exists(_.isInstanceOf[EventTimeWatermark])
+    // Spark's EliminateEventTimeWatermark rule: the operators call
+    // withWatermark unconditionally and rely on it for their batch plans
+    assert(ops(ev).forall(!watermarked(_)))
+    assert(ops(stream).forall(watermarked))
+  }
+
   test("streaming sliding distinct equals the batch sliding distinct") {
     val dir = "/root/testdata/sf0.001"
     val batchEvents = Tables.events(spark, dir).select("ts", "user_id")
-    // the batch oracle is the REGISTRY operator, not the twin's own
-    // batch degenerate — parity is to the production query
-    val expected = graft.ops.Analytics
-      .slidingDistinct(batchEvents, "ts", "user_id", "24 hours", "6 hours")
+    // independent reference: the plain count_distinct a batch-only plan
+    // would use (streaming forbids it)
+    val expected = batchEvents
+      .groupBy(window(col("ts"), "24 hours", "6 hours").as("w"))
+      .agg(count_distinct(col("user_id")).as("n_distinct"))
+      .select(col("w.start"), unix_micros(col("w.start")), col("n_distinct"))
       .collect().map(_.toSeq).toSet
-    // the twin's batch form must match it exactly
-    val twinBatch = StreamOps.slidingDistinctStream(batchEvents, "ts",
-      "user_id", "24 hours", "6 hours", withWatermark = false)
-      .collect().map(_.toSeq).toSet
-    assert(twinBatch == expected)
+    val sliding = (df: org.apache.spark.sql.DataFrame) =>
+      graft.ops.Analytics.slidingDistinct(df, "ts", "user_id", "24 hours", "6 hours")
+    assert(sliding(batchEvents).collect().map(_.toSeq).toSet == expected)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-sdist").toString
     batchEvents.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(batchEvents.schema).parquet(tmp)
-    val q = StreamOps.slidingDistinctStream(stream, "ts", "user_id",
-        "24 hours", "6 hours", withWatermark = true)
+    val q = sliding(stream)
       .writeStream.outputMode("append")
       .format("memory").queryName("graft_sdist_out")
       .start()
@@ -114,7 +133,7 @@ class StreamingSpec extends AnyFunSuite {
     // by hand from the batch op's own current-side counts and the SAME
     // rounded pins, in the same band-ascending fold order
     val one = StreamOps.psiDriftStream(cur, "ts", "value", edges,
-      baseProps, "90 days", withWatermark = false).collect()
+      baseProps, "90 days").collect()
     assert(one.length == 1)
     val tot = batch.map(_.getLong(4)).sum.toDouble
     val expected = batch.map(_.getInt(0)).sorted.foldLeft(0.0) { (acc, b) =>
@@ -131,13 +150,13 @@ class StreamingSpec extends AnyFunSuite {
     // daily windows: the streamed run over the same parquet must emit a
     // prefix-subset (only watermark-open tail windows may be missing)
     val twinDaily = StreamOps.psiDriftStream(cur, "ts", "value", edges,
-      baseProps, "24 hours", withWatermark = false)
+      baseProps, "24 hours")
       .collect().map(_.toSeq).toSet
     val tmp = java.nio.file.Files.createTempDirectory("graft-psi").toString
     cur.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(cur.schema).parquet(tmp)
     val q = StreamOps.psiDriftStream(stream, "ts", "value", edges,
-        baseProps, "24 hours", withWatermark = true)
+        baseProps, "24 hours")
       .writeStream.outputMode("append")
       .format("memory").queryName("graft_psi_out")
       .start()
@@ -150,17 +169,26 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming SPRT twin: hourly counts + batch finish equal the batch monitor") {
+    import graft.ops.Stats
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.events(spark, dir)
       .select("ts", "event_id", "event_type")
-    val batch = graft.ops.Stats.sprtMonitor(ev, col("event_id"),
-        col("ts"), col("event_type") === "purchase",
+    val isPurchase = col("event_type") === "purchase"
+    val batch = Stats.sprtMonitor(ev, col("event_id"), "ts", isPurchase,
         p0 = 0.19, p1 = 0.21, alpha = 0.05, beta = 0.10)
       .collect().map(_.toSeq)
-    // batch-mode call of the streaming source == the monitor's buckets
-    val one = StreamOps.sprtHourlyStream(ev, "ts", "event_id",
-        "event_type", "purchase", "sprt", withWatermark = false)
+    // independent reference: arm B by the md5 split, date_trunc hours
+    val ref = ev.filter(
+        conv(substring(md5(concat(lit("sprt:"), col("event_id").cast("string"))),
+          1, 8), 16, 10).cast("long") % 2 === 1)
+      .groupBy(date_trunc("hour", col("ts")))
+      .agg(count(lit(1)), sum(when(isPurchase, 1L).otherwise(0L)))
       .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2))).toSet
+    val hourly = (df: org.apache.spark.sql.DataFrame) =>
+      Stats.sprtHourly(df, col("event_id"), "ts", isPurchase)
+    val one = hourly(ev)
+      .collect().map(r => (r.get(0), r.getLong(1), r.getLong(2))).toSet
+    assert(one == ref)
     assert(one == batch.map(s => (s(0), s(1), s(2))).toSet)
     // streamed append over the same rows: closed hours must be batch
     // rows, and the shared finisher over the DRAINED sink replays the
@@ -168,8 +196,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-sprt").toString
     ev.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(ev.schema).parquet(tmp)
-    val q = StreamOps.sprtHourlyStream(stream, "ts", "event_id",
-        "event_type", "purchase", "sprt", withWatermark = true)
+    val q = hourly(stream)
       .writeStream.outputMode("append")
       .format("memory").queryName("graft_sprt_out")
       .start()
@@ -181,7 +208,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(sinkRows.subsetOf(one), "streamed hours must be batch hours")
     assert(sinkRows.size >= one.size - 2,
       s"streamed ${sinkRows.size} of ${one.size} hours")
-    val finished = graft.ops.Stats.sprtFinish(sink,
+    val finished = Stats.sprtFinish(sink,
         p0 = 0.19, p1 = 0.21, alpha = 0.05, beta = 0.10)
       .collect().map(_.toSeq).toSet
     val batchClosed = batch.filter(s =>
@@ -219,7 +246,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-dq").toString
     batchEvents.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(batchEvents.schema).parquet(tmp)
-    val q = StreamOps.dqMonitorStream(stream, aggs, constraints)
+    val q = Analytics.dqSuite(stream, aggs, constraints)
       .writeStream.outputMode("complete")
       .format("memory").queryName("graft_dq_out")
       .start()
@@ -239,7 +266,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-gopher").toString
     docs.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(docs.schema).parquet(tmp)
-    val q = StreamOps.gopherGateStream(stream, "doc_id", "text")
+    val q = TextAnalysis.gopherRules(stream, "doc_id", "text")
       .writeStream.outputMode("append")
       .format("memory").queryName("graft_gopher_out")
       .start()
@@ -276,17 +303,17 @@ class StreamingSpec extends AnyFunSuite {
     for ((name, batchF, streamF) <- Seq(
       ("graft_rep_out",
         TextAnalysis.gopherRepetition(docs, "doc_id", "text"),
-        StreamOps.gopherRepetitionStream(stream, "doc_id", "text")),
+        TextAnalysis.gopherRepetition(stream, "doc_id", "text")),
       ("graft_fw_out",
         TextAnalysis.fineWebRules(docs, "doc_id", "text"),
-        StreamOps.fineWebGateStream(stream, "doc_id", "text")),
+        TextAnalysis.fineWebRules(stream, "doc_id", "text")),
       ("graft_luhn_out",
         TextAnalysis.piiLuhnAudit(docs, "doc_id", "text"),
-        StreamOps.piiLuhnStream(stream, "doc_id", "text")),
+        TextAnalysis.piiLuhnAudit(stream, "doc_id", "text")),
       ("graft_fim_out",
         TextAnalysis.fimSplit(docs, "doc_id", "text", rate = 0.5,
           minChars = 40),
-        StreamOps.fimSplitStream(stream, "doc_id", "text", rate = 0.5,
+        TextAnalysis.fimSplit(stream, "doc_id", "text", rate = 0.5,
           minChars = 40)))) {
       val expected = batchF.collect().map(_.toSeq).toSet
       val q = streamF.writeStream.outputMode("append")
@@ -323,7 +350,7 @@ class StreamingSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-encaudit").toString
     docs.write.mode("overwrite").parquet(tmp)
     val stream = spark.readStream.schema(docs.schema).parquet(tmp)
-    val q = StreamOps.encodingAuditStream(stream, "source", "text")
+    val q = TextAnalysis.encodingAudit(stream, "source", "text")
       .writeStream.outputMode("complete")
       .format("memory").queryName("graft_encaudit_out")
       .start()
@@ -332,23 +359,6 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.table("graft_encaudit_out").collect().map(_.toSeq).toSet
     // complete mode over a drained finite stream = exact batch parity
     assert(got == expected && got.nonEmpty)
-  }
-
-  test("streaming dedup emits one row per key") {
-    import graft.streaming.StreamOps
-    val dir = "/root/testdata/sf0.001"
-    val ev = Tables.events(spark, dir).select("ts", "event_type", "user_id")
-    val expected = ev.select("event_type").distinct().count()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dedup").toString
-    ev.write.mode("overwrite").parquet(tmp)
-    val stream = spark.readStream.schema(ev.schema).parquet(tmp)
-    val q = StreamOps.streamingDedup(stream, Seq("event_type"), "ts", "1 hour")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_dedup_out")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    assert(spark.table("graft_dedup_out").count() == expected)
   }
 
   test("stateful streaming sessionization matches the batch window plan") {
@@ -376,38 +386,6 @@ class StreamingSpec extends AnyFunSuite {
       s"streaming emitted non-batch sessions: ${(got -- batch).take(3)}")
     assert(got.size >= (batch.size * 6) / 10,
       s"only ${got.size} of ${batch.size} sessions closed")
-  }
-
-  test("native session_window equals the window-function sessionization, batch and stream") {
-    val dir = "/root/testdata/sf0.001"
-    val ev = Tables.events(spark, dir).select("ts", "user_id", "value")
-    val expected = StreamOps.sessionizeBatch(ev, gapMinutes = 30)
-      .select("user_id", "session_start", "n_events", "sum_value")
-      .collect().map(_.toSeq).toSet
-
-    // batch: the native operator computes the same sessions (no
-    // exact-gap boundary events exist in the microsecond-stamped data)
-    val native = StreamOps.sessionizeNative(ev, gapMinutes = 30,
-      withWatermark = false).collect().map(_.toSeq).toSet
-    assert(native == expected)
-
-    // stream: append mode emits each session once the watermark closes
-    // it — a subset of batch, missing at most each user's final session
-    val tmp = java.nio.file.Files.createTempDirectory("graft-sess").toString
-    ev.write.mode("overwrite").parquet(tmp)
-    val stream = spark.readStream.schema(ev.schema).parquet(tmp)
-    val q = StreamOps.sessionizeNative(stream, gapMinutes = 30,
-      withWatermark = true)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_sess_native")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("graft_sess_native").collect().map(_.toSeq).toSet
-    assert(got.subsetOf(expected))
-    val users = ev.select("user_id").distinct().count()
-    assert(got.size >= expected.size - users,
-      s"missing more than one open session per user: ${expected.size - got.size}")
   }
 
   test("streaming CDC upsert converges to the batch merge under any interleaving") {
@@ -514,7 +492,7 @@ class StreamingSpec extends AnyFunSuite {
       3L -> "",
       4L -> "abc",      // shorter than k
       5L -> "abcdefgh", // exactly k
-      6L -> null, 7L -> null)
+      6L -> null, 7L -> null, 8L -> null)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
     val ds = spark.createDataset(texts.zipWithIndex.map { case ((id, tx), i) =>
       StreamOps.DocEvent(id, new java.sql.Timestamp(t0 + i * 60000L), tx)
@@ -524,8 +502,8 @@ class StreamingSpec extends AnyFunSuite {
       df.select("doc_id", "band", "bh").collect().map(r =>
         (r.getLong(0), r.getInt(1),
           r.getSeq[Any](2).map(v => Option(v).map(_.asInstanceOf[Long])))).toSet
-    val kernel = slices(Dedup.minhashBandStore(ds.toDF(), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id"))
+    val store = Dedup.minhashBandStore(ds.toDF(), "doc_id", "text")
+    val kernel = slices(store.withColumnRenamed("id", "doc_id"))
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-bands").toString
     ds.toDF().write.mode("overwrite").parquet(tmp)
@@ -539,14 +517,15 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     val streamed = slices(spark.table("graft_bands_out"))
 
-    val nullDocs = Set(6L, 7L)
-    assert(streamed == kernel.filterNot(r => nullDocs(r._1)))
+    // null text forms no band row, in the kernel or in the stream — so
+    // no (all-null) bucket can pair the null docs with each other
+    assert(streamed == kernel)
     assert(streamed.map(_._1) == Set(1L, 2L, 3L, 4L, 5L) && streamed.size == 5 * 8)
-    // null text: the kernel's slices are all null — equal to each other,
-    // so a bucket keyed on them would pair the two null docs
-    assert(kernel.filter(r => nullDocs(r._1)).forall(_._3.forall(_.isEmpty)))
+    val nullDocs = Set(6L, 7L, 8L)
+    assert(Dedup.bucketPairs(store).filter(col("id1").isin(nullDocs.toSeq: _*) ||
+      col("id2").isin(nullDocs.toSeq: _*)).isEmpty)
 
-    // ... and neither path forms such a bucket
+    // ... and neither near-dup path pairs them
     val batchPairs = StreamOps.nearDupCandidatesBatch(ds)
       .select("id1", "id2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
